@@ -14,7 +14,7 @@ import graft.transcripts.Transcripts
   *
   * Physical shape (SURVEY.md §2.7): ONE projection computes parse results,
   * enrichment and all route flags — narrow transformations fused by
-  * whole-stage codegen around the single mapPartitions parse; fan-out to
+  * whole-stage codegen with the single parse `Generate`; fan-out to
   * sinks is N filters over that one plan (persist before multi-sink writes
   * so the parse runs once, the analog of the reference's COW-clone fan-out).
   */

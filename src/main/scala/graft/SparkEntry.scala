@@ -3105,7 +3105,8 @@ object SparkEntry {
          pr AS (SELECT a.conv_id AS doc_a, b.conv_id AS doc_b,
                   len(list_intersect(a.s, b.s))::double /
                   len(list_distinct(list_concat(a.s, b.s)))::double AS jaccard
-                FROM sh a JOIN sh b ON a.conv_id < b.conv_id)
+                FROM sh a JOIN sh b ON a.conv_id < b.conv_id
+                WHERE len(a.s) > 0 AND len(b.s) > 0)
          SELECT doc_a, doc_b, jaccard FROM pr WHERE jaccard >= 0.5"""),
 
     "q_corpus_bpe_pairs" ->

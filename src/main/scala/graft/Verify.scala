@@ -21,6 +21,9 @@ object Verify {
     SparkEntry.queries
       .filter { case (name, _) => only.isEmpty || only(name) }
       .foreach { case (name, fn) =>
+      // a query that fails to build or run must leave NO output behind:
+      // a previous run's parquet would otherwise pass the parity compare
+      org.apache.commons.io.FileUtils.deleteDirectory(new java.io.File(s"$outDir/$name"))
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

@@ -594,7 +594,9 @@ object FilterX {
     */
   private def cmpNumeric(l: FxVal, r: FxVal, op: Int): Column = {
     def isLongish(t: FxType) = t == FxInt || t == FxBool || t == FxNull || t == FxDatetime
-    def isParsed(t: FxType) = t == FxString || t == FxJson
+    // bytes/protobuf never parse as numbers: NaN, like an unparseable string
+    def isParsed(t: FxType) =
+      t == FxString || t == FxJson || t == FxBytes || t == FxProtobuf
     def toLong(c: Column, t: FxType): Column = t match {
       case FxInt      => c
       case FxBool     => c.cast(LongType)
@@ -603,9 +605,10 @@ object FilterX {
       case _          => c
     }
     def toDouble(c: Column, t: FxType): Column = t match {
-      case FxDouble          => c
-      case FxString | FxJson => c.try_cast(DoubleType)
-      case other             => toLong(c, other).cast(DoubleType)
+      case FxDouble             => c
+      case FxString | FxJson    => c.try_cast(DoubleType)
+      case FxBytes | FxProtobuf => lit(null).cast(DoubleType)
+      case other                => toLong(c, other).cast(DoubleType)
     }
     val (lc, lt) = materialize(l)
     val (rc, rt) = materialize(r)
@@ -619,9 +622,10 @@ object FilterX {
     }
   }
 
-  /** Type-aware comparison (_evaluate_type_aware, expr-comparison.c:143):
-    * string-family LHS compares textually; a `null` operand makes ==/!=
-    * pure type comparisons; everything else compares numerically. A json
+  /** Type-aware comparison (_evaluate_type_aware, expr-comparison.c:143),
+    * dispatched on the LEFT operand: string-family LHS compares textually;
+    * a `null` operand makes ==/!= pure type comparisons; everything else
+    * compares numerically (a bytes RHS then counts as unparseable). A json
     * scalar LHS (getattr out of a json object — dynamically typed in the
     * reference) compares numerically against numbers and textually
     * otherwise.
@@ -631,8 +635,11 @@ object FilterX {
     val rt = r match { case FxScalar(_, t) => t; case _ => FxJson }
     val numericTypes = Set[FxType](FxInt, FxDouble, FxBool, FxDatetime)
     val bytesFamily = Set[FxType](FxBytes, FxProtobuf)
-    if (bytesFamily.contains(lt) || bytesFamily.contains(rt)) {
-      // bytes/protobuf operands compare as raw bytes (expr-comparison.c:76-93
+    // FxJson covers json scalars and dict/list trees
+    val stringFamily = lt == FxString || lt == FxJson
+    if (bytesFamily.contains(lt) || (stringFamily && bytesFamily.contains(rt))) {
+      // a bytes/protobuf LHS, or a string-family LHS against a bytes RHS,
+      // compares as raw bytes (expr-comparison.c:76-93
       // _convert_filterx_object_to_string returns the PAYLOAD, not the hex
       // repr, then memcmp + length tiebreak). Spark's BinaryType ordering is
       // exactly unsigned memcmp with length tiebreak; a string operand joins
@@ -936,6 +943,7 @@ object FilterX {
           val out = t match {
             case FxDouble          => c
             case FxString | FxJson => c.try_cast(DoubleType)
+      case FxBytes | FxProtobuf => lit(null).cast(DoubleType)
             case FxNull            => lit(null).cast(DoubleType)
             case FxDatetime        => unix_timestamp(c.cast(TimestampType)).cast(DoubleType)
             case _                 => c.cast(DoubleType)

@@ -3,8 +3,7 @@ package graft.parsers
 import java.time.LocalDateTime
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -182,86 +181,43 @@ object CiscoParser {
 
   // ------------------------------------------------------------ Spark stage
 
-  private def outFields(prefix: String): Seq[StructField] = Seq(
-    StructField(s"${prefix}pri", IntegerType, nullable = true),
-    StructField(s"${prefix}ts", TimestampNTZType, nullable = true),
-    StructField(s"${prefix}host", StringType, nullable = true),
-    StructField(s"${prefix}cpu_module", StringType, nullable = true),
-    StructField(s"${prefix}facility", StringType, nullable = true),
-    StructField(s"${prefix}severity", StringType, nullable = true),
-    StructField(s"${prefix}mnemonic", StringType, nullable = true),
-    StructField(s"${prefix}msg", StringType, nullable = true),
-    StructField(s"${prefix}seqid", StringType, nullable = true),
-    StructField(s"${prefix}invalid", BooleanType, nullable = false))
-
-  /** cisco-parser() as a scan-stage row function; unmatched rows keep null
+  /** cisco-parser() as a parse stage (one `Generate` operator for batch
+    * and streaming frames, see [[ParseStage]]); unmatched rows keep null
     * outputs and `<prefix>invalid = true` (tag-and-keep, like the other
-    * parser stages — route on the flag for drop-invalid).
+    * parser stages — route on the flag for drop-invalid). A stage re-run
+    * overwrites its earlier output columns.
     */
-  def stage(df0: DataFrame, textCol: String, opt: SyslogFormat.Options,
+  def stage(df: DataFrame, textCol: String, opt: SyslogFormat.Options,
       prefix: String = "cisco_"): DataFrame = {
-    val stale = outFields(prefix).map(_.name).filter(df0.columns.contains)
-    val df = if (stale.isEmpty) df0 else df0.drop(stale: _*)
-    val inSchema = df.schema
-    val outSchema = StructType(inSchema.fields ++ outFields(prefix))
-    val textIdx = inSchema.fieldIndex(textCol)
-    val nIn = inSchema.length
-    val inTypes = inSchema.fields.map(_.dataType)
-    val nOut = outFields(prefix).length
+    val parser = Parser(opt, prefix)
+    ParseStage(ParseStage.dropStale(df, parser), textCol, parser)
+  }
 
-    if (df.isStreaming) {
-      val enc = org.apache.spark.sql.Encoders.row(outSchema)
-      return df.mapPartitions { it =>
-        it.map { row =>
-          val text = row.getString(textIdx)
-          val p = if (text == null) None else parse(text, opt)
-          val out = new Array[Any](nIn + nOut)
-          var i = 0
-          while (i < nIn) { out(i) = row.get(i); i += 1 }
-          p match {
-            case Some(m) =>
-              out(nIn) = m.pri
-              out(nIn + 1) = LocalDateTime.ofEpochSecond(
-                m.tsSec + opt.recvZone.getRules.getOffset(
-                  java.time.Instant.ofEpochSecond(m.tsSec)).getTotalSeconds,
-                m.tsUsec * 1000, java.time.ZoneOffset.UTC)
-              out(nIn + 2) = m.host; out(nIn + 3) = m.cpuModule
-              out(nIn + 4) = m.facility; out(nIn + 5) = m.severity
-              out(nIn + 6) = m.mnemonic; out(nIn + 7) = m.msg
-              out(nIn + 8) = m.seqId; out(nIn + 9) = false
-            case None => out(nIn + 9) = true
-          }
-          new org.apache.spark.sql.catalyst.expressions.GenericRow(out): org.apache.spark.sql.Row
-        }
-      }(enc)
-    }
+  final case class Parser(opt: SyslogFormat.Options, prefix: String) extends RowParser {
+    def label: String = "cisco-parser"
+    def fields: Seq[StructField] = Seq(
+      StructField(s"${prefix}pri", IntegerType, nullable = true),
+      StructField(s"${prefix}ts", TimestampNTZType, nullable = true),
+      StructField(s"${prefix}host", StringType, nullable = true),
+      StructField(s"${prefix}cpu_module", StringType, nullable = true),
+      StructField(s"${prefix}facility", StringType, nullable = true),
+      StructField(s"${prefix}severity", StringType, nullable = true),
+      StructField(s"${prefix}mnemonic", StringType, nullable = true),
+      StructField(s"${prefix}msg", StringType, nullable = true),
+      StructField(s"${prefix}seqid", StringType, nullable = true),
+      StructField(s"${prefix}invalid", BooleanType, nullable = false))
 
-    val rdd = Bridge.toInternalRdd(df).mapPartitions { it =>
-      it.map { row =>
-        val text = if (row.isNullAt(textIdx)) null else row.getUTF8String(textIdx).toString
-        val p = if (text == null) None else parse(text, opt)
-        val out = new GenericInternalRow(nIn + nOut)
-        var i = 0
-        while (i < nIn) { out.update(i, row.get(i, inTypes(i))); i += 1 }
-        p match {
-          case Some(m) =>
-            val ofs = opt.recvZone.getRules.getOffset(
-              java.time.Instant.ofEpochSecond(m.tsSec)).getTotalSeconds
-            out.update(nIn, m.pri)
-            out.update(nIn + 1, (m.tsSec + ofs) * 1000000L + m.tsUsec)
-            out.update(nIn + 2, UTF8String.fromString(m.host))
-            out.update(nIn + 3, UTF8String.fromString(m.cpuModule))
-            out.update(nIn + 4, UTF8String.fromString(m.facility))
-            out.update(nIn + 5, UTF8String.fromString(m.severity))
-            out.update(nIn + 6, UTF8String.fromString(m.mnemonic))
-            out.update(nIn + 7, UTF8String.fromString(m.msg))
-            out.update(nIn + 8, UTF8String.fromString(m.seqId))
-            out.update(nIn + 9, false)
-          case None => out.update(nIn + 9, true)
-        }
-        out: org.apache.spark.sql.catalyst.InternalRow
+    def parse(text: UTF8String): InternalRow =
+      (if (text == null) None else CiscoParser.parse(text.toString, opt)) match {
+        case Some(m) =>
+          val ofs = opt.recvZone.getRules.getOffset(
+            java.time.Instant.ofEpochSecond(m.tsSec)).getTotalSeconds
+          InternalRow(m.pri, (m.tsSec + ofs) * 1000000L + m.tsUsec,
+            UTF8String.fromString(m.host), UTF8String.fromString(m.cpuModule),
+            UTF8String.fromString(m.facility), UTF8String.fromString(m.severity),
+            UTF8String.fromString(m.mnemonic), UTF8String.fromString(m.msg),
+            UTF8String.fromString(m.seqId), false)
+        case None => InternalRow(null, null, null, null, null, null, null, null, null, true)
       }
-    }
-    Bridge.internalCreateDataFrame(df.sparkSession, rdd, outSchema)
   }
 }

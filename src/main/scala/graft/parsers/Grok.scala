@@ -1,10 +1,8 @@
 package graft.parsers
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, GenericRow}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -26,7 +24,7 @@ final case class CompiledGrokRule(
 
 /** Zero-copy CharSequence over an ASCII UTF8String: the regex engine reads
   * the parquet bytes in place — no String materialization per row. One
-  * instance is reused for a whole partition.
+  * instance is reused for a whole task.
   */
 private final class AsciiSeq extends CharSequence {
   var s: UTF8String = _
@@ -37,148 +35,77 @@ private final class AsciiSeq extends CharSequence {
 }
 
 /** The compiled parse stage (north star): precompiled `java.util.regex`
-  * patterns applied per-partition over the UTF-8 byte columns, first-match-
-  * wins, named captures emitted into a `fields` map column, matching rule id
-  * into `rule_id`, and — exactly like the reference, which tags instead of
+  * patterns applied to the UTF-8 text column, first-match-wins, named
+  * captures emitted into a `fields` map column, matching rule id into
+  * `rule_id`, and — exactly like the reference, which tags instead of
   * dropping (reference lib/logmsg/logmsg.h:105-124 LM_T_MSG_PARSE_ERROR) —
   * a `tags` array carrying `msg.parse_error` for unmatched rows.
   *
-  * Patterns are compiled once per partition (the analog of the reference's
+  * Patterns are compiled once per task (the analog of the reference's
   * config-time PCRE2 JIT compile, reference lib/logmatcher.c:291-345).
-  *
-  * Batch frames take the InternalRow path: the matcher runs directly over
-  * the UTF-8 bytes via a reusable CharSequence view (ASCII fast path;
-  * non-ASCII rows fall back to String decoding), captures are zero-ish-copy
-  * UTF8String slices, and no external-Row encoder runs — the row codec, not
-  * the regex, is what throttles a wide executor. Streaming frames use the
-  * (codec-bearing) Row path since they cannot be lowered to an RDD.
+  * The stage is one `Generate` operator (see [[ParseStage]]) for batch and
+  * streaming frames alike; the matcher runs directly over the UTF-8 bytes
+  * via a reusable CharSequence view (ASCII fast path; non-ASCII rows fall
+  * back to String decoding), and captures are UTF8String slices.
   */
 object GrokStage {
 
   val FieldsType: MapType = MapType(StringType, StringType, valueContainsNull = false)
   val ParseErrorTag = "msg.parse_error"
 
-  private def outSchemaOf(inSchema: StructType): StructType = inSchema
-    .add(StructField("fields", FieldsType, nullable = false))
-    .add(StructField("rule_id", StringType, nullable = true))
-    .add(StructField("tags", ArrayType(StringType, containsNull = false), nullable = false))
+  private val noTags = new GenericArrayData(Array.empty[Any])
+  private val errTags = new GenericArrayData(Array[Any](UTF8String.fromString(ParseErrorTag)))
+  private val emptyFields = new ArrayBasedMapData(noTags, noTags)
+
+  final case class Parser(rules: Seq[GrokRule]) extends RowParser {
+    def label: String = rules.map(_.id).mkString("grok[", ",", "]")
+    def fields: Seq[StructField] = Seq(
+      StructField("fields", FieldsType, nullable = false),
+      StructField("rule_id", StringType, nullable = true),
+      StructField("tags", ArrayType(StringType, containsNull = false), nullable = false))
+
+    @transient private lazy val compiled =
+      rules.map(r => (r.compile, UTF8String.fromString(r.id))).toArray
+    @transient private lazy val ascii = new AsciiSeq
+
+    def parse(textU: UTF8String): InternalRow = {
+      if (textU == null) return InternalRow(emptyFields, null, errTags)
+      val isAscii = textU.numBytes() == textU.numChars()
+      val cs: CharSequence = if (isAscii) { ascii.s = textU; ascii } else textU.toString
+      var i = 0
+      while (i < compiled.length) {
+        val (r, rid) = compiled(i)
+        val m = r.pattern.matcher(cs)
+        if (m.matches()) {
+          val n = r.captures.length
+          val keys = new Array[Any](n)
+          val values = new Array[Any](n)
+          var g = 0
+          var k = 0
+          while (g < n) {
+            val s = m.start(g + 1)
+            if (s >= 0) {
+              keys(k) = UTF8String.fromString(r.captures(g))
+              values(k) =
+                if (isAscii) textU.substring(s, m.end(g + 1))
+                else UTF8String.fromString(m.group(g + 1))
+              k += 1
+            }
+            g += 1
+          }
+          val ks = if (k == n) keys else keys.take(k)
+          val vs = if (k == n) values else values.take(k)
+          return InternalRow(
+            new ArrayBasedMapData(new GenericArrayData(ks), new GenericArrayData(vs)), rid, noTags)
+        }
+        i += 1
+      }
+      InternalRow(emptyFields, null, errTags)
+    }
+  }
 
   def apply(df: DataFrame, textCol: String, rules: Seq[GrokRule]): DataFrame =
-    if (df.isStreaming) applyRows(df, textCol, rules)
-    else applyInternal(df, textCol, rules)
-
-  private def applyInternal(df: DataFrame, textCol: String, rules: Seq[GrokRule]): DataFrame = {
-    val spark = df.sparkSession
-    val inSchema = df.schema
-    val outSchema = outSchemaOf(inSchema)
-    val textIdx = inSchema.fieldIndex(textCol)
-    val inTypes = inSchema.fields.map(_.dataType)
-    val ruleSpecs = rules.toArray
-    val nIn = inSchema.length
-    val rdd = Bridge.toInternalRdd(df).mapPartitions { it =>
-      val compiled = ruleSpecs.map(r =>
-        (r.compile, UTF8String.fromString(r.id)))
-      val errTags = new GenericArrayData(Array[Any](UTF8String.fromString(ParseErrorTag)))
-      val noTags = new GenericArrayData(Array.empty[Any])
-      val emptyFields = new ArrayBasedMapData(noTags, noTags)
-      val ascii = new AsciiSeq
-      it.map { row =>
-        val textU = if (row.isNullAt(textIdx)) null else row.getUTF8String(textIdx)
-        var ruleId: UTF8String = null
-        var fields: ArrayBasedMapData = emptyFields
-        if (textU != null) {
-          val isAscii = textU.numBytes() == textU.numChars()
-          val cs: CharSequence = if (isAscii) { ascii.s = textU; ascii } else textU.toString
-          var i = 0
-          while (i < compiled.length && ruleId == null) {
-            val (r, rid) = compiled(i)
-            val m = r.pattern.matcher(cs)
-            if (m.matches()) {
-              val n = r.captures.length
-              val keys = new Array[Any](n)
-              val values = new Array[Any](n)
-              var g = 0
-              var k = 0
-              while (g < n) {
-                val s = m.start(g + 1)
-                if (s >= 0) {
-                  keys(k) = UTF8String.fromString(r.captures(g))
-                  values(k) =
-                    if (isAscii) textU.substring(s, m.end(g + 1))
-                    else UTF8String.fromString(m.group(g + 1))
-                  k += 1
-                }
-                g += 1
-              }
-              val ks = if (k == n) keys else keys.take(k)
-              val vs = if (k == n) values else values.take(k)
-              fields = new ArrayBasedMapData(new GenericArrayData(ks), new GenericArrayData(vs))
-              ruleId = rid
-            }
-            i += 1
-          }
-        }
-        val out = new GenericInternalRow(nIn + 3)
-        var c = 0
-        while (c < nIn) { out.update(c, row.get(c, inTypes(c))); c += 1 }
-        out.update(nIn, fields)
-        out.update(nIn + 1, ruleId)
-        out.update(nIn + 2, if (ruleId != null) noTags else errTags)
-        out: InternalRow
-      }
-    }
-    Bridge.internalCreateDataFrame(spark, rdd, outSchema)
-  }
-
-  /** External-Row path (streaming frames): same semantics via the Dataset
-    * encoder.
-    */
-  private def applyRows(df: DataFrame, textCol: String, rules: Seq[GrokRule]): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = outSchemaOf(inSchema)
-    val textIdx = inSchema.fieldIndex(textCol)
-    val ruleSpecs = rules.toArray
-    val enc = Encoders.row(outSchema)
-    val nIn = inSchema.length
-    df.mapPartitions { it =>
-      val compiled = ruleSpecs.map(_.compile)
-      val noTags = Seq.empty[String]
-      val errTags = Seq(ParseErrorTag)
-      val emptyFields = Map.empty[String, String]
-      it.map { row =>
-        val text = row.getString(textIdx)
-        var fields: Map[String, String] = null
-        var ruleId: String = null
-        if (text != null) {
-          var i = 0
-          while (i < compiled.length && ruleId == null) {
-            val r = compiled(i)
-            val m = r.pattern.matcher(text)
-            if (m.matches()) {
-              val b = Map.newBuilder[String, String]
-              var g = 0
-              while (g < r.captures.length) {
-                val v = m.group(g + 1)
-                if (v != null) b += r.captures(g) -> v
-                g += 1
-              }
-              fields = b.result()
-              ruleId = r.id
-            }
-            i += 1
-          }
-        }
-        val matched = ruleId != null
-        val out = new Array[Any](nIn + 3)
-        var c = 0
-        while (c < nIn) { out(c) = row.get(c); c += 1 }
-        out(nIn) = if (matched) fields else emptyFields
-        out(nIn + 1) = ruleId
-        out(nIn + 2) = if (matched) noTags else errTags
-        new GenericRow(out): Row
-      }
-    }(enc)
-  }
+    ParseStage(df, textCol, Parser(rules))
 
   /** drop-invalid(yes) sugar (reference syslog-parser drop-invalid flag):
     * unmatched rows are DROPPED instead of tagged — the only row-dropping

@@ -1,0 +1,95 @@
+package graft.parsers
+
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
+import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode, FalseLiteral, JavaCode}
+import org.apache.spark.sql.catalyst.expressions.codegen.Block._
+import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
+import org.apache.spark.sql.functions.col
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.{StructField, StructType}
+import org.apache.spark.unsafe.types.UTF8String
+
+/** A parser's per-row function over one text column: the fields it appends
+  * and how one text value becomes one output row. Per-task state (compiled
+  * patterns, matchers, scratch buffers) lives in `@transient lazy val`s, so
+  * each task builds its own after deserialization — the analog of the
+  * reference compiling a parser once at config time.
+  */
+trait RowParser extends Serializable {
+  /** Short plan label (rule ids, never regexes) shown by `explain`. */
+  def label: String
+  def fields: Seq[StructField]
+  /** The appended values for `text` (null when the input is null), in
+    * `fields` order; a null result drops the input row. */
+  def parse(text: UTF8String): InternalRow
+}
+
+/** A parse stage as a Catalyst generator: one output row per input row (no
+  * row when the parser returns null). It plans as its own `Generate`
+  * operator, so Catalyst prunes the columns it does not need below it,
+  * keeps predicates on its outputs above it (the parse runs once per row),
+  * and batch and streaming frames run the same code. The generated code
+  * only calls `parser.parse`, which lets `Generate` join whole-stage
+  * codegen: input columns and parsed fields pass to the next operator as
+  * variables, with no joined row or extra projection per row.
+  */
+final case class ParseGenerator(child: Expression, parser: RowParser)
+    extends UnaryExpression with Generator {
+  override lazy val elementSchema: StructType = StructType(parser.fields)
+  override def eval(input: InternalRow): IterableOnce[InternalRow] =
+    ParseGenerator.rows(parser.parse(child.eval(input).asInstanceOf[UTF8String]))
+  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
+    val text = child.genCode(ctx)
+    val p = ctx.addReferenceObj("parser", parser, classOf[RowParser].getName)
+    val rows = JavaCode.variable(ctx.freshName("parsed"), classOf[IterableOnce[_]])
+    ExprCode(code"""
+      |${text.code}
+      |${classOf[IterableOnce[_]].getName}<InternalRow> $rows = ${classOf[ParseGenerator].getName}.rows(
+      |  $p.parse(${text.isNull} ? null : ${text.value}));
+      |""".stripMargin, FalseLiteral, rows)
+  }
+  override def toString: String = s"${parser.label}($child)"
+  override protected def withNewChildInternal(c: Expression): ParseGenerator = copy(child = c)
+}
+
+object ParseGenerator {
+  def rows(parsed: InternalRow): IterableOnce[InternalRow] =
+    if (parsed == null) Iterator.empty else Iterator.single(parsed)
+}
+
+object ParseStage {
+
+  /** `df` with `parser`'s fields appended, parsed from `textCol`. */
+  def apply(df: DataFrame, textCol: String, parser: RowParser): DataFrame =
+    df.select(col("*"),
+      Bridge.column(ParseGenerator(UnresolvedAttribute.quoted(textCol), parser)))
+
+  /** Output stage columns that `df` already carries, dropped before the
+    * stage re-adds them: re-running a parser (the same parser in two log
+    * paths, or a mid-pipeline re-parse) OVERWRITES its previous output like
+    * the reference does, instead of duplicating column names. */
+  def dropStale(df: DataFrame, parser: RowParser): DataFrame = {
+    val stale = parser.fields.map(_.name).filter(df.columns.contains)
+    if (stale.isEmpty) df else df.drop(stale: _*)
+  }
+
+  def utf8(s: String): UTF8String = if (s == null) null else UTF8String.fromString(s)
+
+  def strArray(xs: Iterable[String]): GenericArrayData =
+    new GenericArrayData(xs.iterator.map(utf8).toArray[Any])
+
+  /** A string map from parallel key/value sequences, in the given order. */
+  def strMap(keys: Iterable[String], values: Iterable[String]): ArrayBasedMapData =
+    new ArrayBasedMapData(strArray(keys), strArray(values))
+
+  /** Last-wins map over `pairs`, keys in first-seen order. */
+  def lastWins(pairs: Iterable[(String, String)]): ArrayBasedMapData = {
+    val m = new java.util.LinkedHashMap[String, String]()
+    pairs.foreach { case (k, v) => m.put(k, v) }
+    import scala.jdk.CollectionConverters._
+    strMap(m.keySet.asScala, m.values.asScala)
+  }
+}

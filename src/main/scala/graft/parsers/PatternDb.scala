@@ -2,12 +2,10 @@ package graft.parsers
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{GenericInternalRow, GenericRow}
 import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -576,105 +574,42 @@ object PatternDb {
 
   val ParseErrorTag = "msg.parse_error"
   private val FieldsType = MapType(StringType, StringType, valueContainsNull = false)
+  private val noAny = new GenericArrayData(Array.empty[Any])
+  private val errTags = new GenericArrayData(Array[Any](UTF8String.fromString(ParseErrorTag)))
+  private val emptyFields = new ArrayBasedMapData(noAny, noAny)
 
-  private def outSchemaOf(in: StructType): StructType = in
-    .add(StructField("pdb_fields", FieldsType, nullable = false))
-    .add(StructField("pdb_rule", StringType, nullable = true))
-    .add(StructField("pdb_class", StringType, nullable = true))
-    .add(StructField("pdb_tags", ArrayType(StringType, containsNull = false), nullable = false))
+  final case class Parser(rules: Seq[PdbRule]) extends RowParser {
+    def label: String = rules.map(_.id).mkString("patterndb[", ",", "]")
+    def fields: Seq[StructField] = Seq(
+      StructField("pdb_fields", FieldsType, nullable = false),
+      StructField("pdb_rule", StringType, nullable = true),
+      StructField("pdb_class", StringType, nullable = true),
+      StructField("pdb_tags", ArrayType(StringType, containsNull = false), nullable = false))
 
-  /** Annotate `df` with the first-matching rule's captures. Batch frames
-    * run over InternalRow (no external row codec in the scan stage, same
-    * rationale as GrokStage); streaming frames use the Row path.
-    */
-  def annotate(df: DataFrame, textCol: String, rules: Seq[PdbRule]): DataFrame =
-    if (df.isStreaming) annotateRows(df, textCol, rules)
-    else annotateInternal(df, textCol, rules)
+    @transient private lazy val matcher = new Matcher(rules)
+    @transient private lazy val caps = new ArrayBuffer[Cap](8)
+    @transient private lazy val tagCache = new java.util.HashMap[String, GenericArrayData]()
 
-  private def annotateInternal(df: DataFrame, textCol: String, rules: Seq[PdbRule]): DataFrame = {
-    val spark = df.sparkSession
-    val inSchema = df.schema
-    val outSchema = outSchemaOf(inSchema)
-    val textIdx = inSchema.fieldIndex(textCol)
-    val inTypes = inSchema.fields.map(_.dataType)
-    val nIn = inSchema.length
-    val ruleSeq = rules
-    val rdd = Bridge.toInternalRdd(df).mapPartitions { it =>
-      val matcher = new Matcher(ruleSeq)
-      val caps = new ArrayBuffer[Cap](8)
-      val errTags = new GenericArrayData(Array[Any](UTF8String.fromString(ParseErrorTag)))
-      val noAny = new GenericArrayData(Array.empty[Any])
-      val emptyFields = new ArrayBasedMapData(noAny, noAny)
-      val tagCache = new java.util.HashMap[String, GenericArrayData]()
-      it.map { row =>
-        val text = if (row.isNullAt(textIdx)) null else row.getUTF8String(textIdx).toString
-        caps.clear()
-        val rule = if (text != null) matcher.find(text, caps) else null
-        val out = new GenericInternalRow(nIn + 4)
-        var c = 0
-        while (c < nIn) { out.update(c, row.get(c, inTypes(c))); c += 1 }
-        if (rule == null) {
-          out.update(nIn, emptyFields)
-          out.update(nIn + 1, null)
-          out.update(nIn + 2, null)
-          out.update(nIn + 3, errTags)
-        } else {
-          val k = caps.length
-          val keys = new Array[Any](k)
-          val values = new Array[Any](k)
-          var g = 0
-          while (g < k) {
-            keys(g) = UTF8String.fromString(caps(g).name)
-            values(g) = UTF8String.fromString(caps(g).value)
-            g += 1
-          }
-          out.update(nIn, new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(values)))
-          out.update(nIn + 1, UTF8String.fromString(rule.id))
-          out.update(nIn + 2, UTF8String.fromString(rule.ruleClass))
-          val tags =
-            if (rule.tags.isEmpty) noAny
-            else tagCache.computeIfAbsent(rule.id,
-              _ => new GenericArrayData(rule.tags.map(t => UTF8String.fromString(t): Any).toArray))
-          out.update(nIn + 3, tags)
-        }
-        out: InternalRow
+    def parse(text: UTF8String): InternalRow = {
+      caps.clear()
+      val rule = if (text != null) matcher.find(text.toString, caps) else null
+      if (rule == null) InternalRow(emptyFields, null, null, errTags)
+      else {
+        val tags =
+          if (rule.tags.isEmpty) noAny
+          else tagCache.computeIfAbsent(rule.id, _ => ParseStage.strArray(rule.tags))
+        InternalRow(ParseStage.strMap(caps.map(_.name), caps.map(_.value)),
+          UTF8String.fromString(rule.id), UTF8String.fromString(rule.ruleClass), tags)
       }
     }
-    Bridge.internalCreateDataFrame(spark, rdd, outSchema)
   }
 
-  private def annotateRows(df: DataFrame, textCol: String, rules: Seq[PdbRule]): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = outSchemaOf(inSchema)
-    val textIdx = inSchema.fieldIndex(textCol)
-    val nIn = inSchema.length
-    val enc = Encoders.row(outSchema)
-    val ruleSeq = rules
-    df.mapPartitions { it =>
-      val matcher = new Matcher(ruleSeq)
-      val caps = new ArrayBuffer[Cap](8)
-      it.map { row =>
-        val text = row.getString(textIdx)
-        caps.clear()
-        val rule = if (text != null) matcher.find(text, caps) else null
-        val out = new Array[Any](nIn + 4)
-        var c = 0
-        while (c < nIn) { out(c) = row.get(c); c += 1 }
-        if (rule == null) {
-          out(nIn) = Map.empty[String, String]
-          out(nIn + 1) = null
-          out(nIn + 2) = null
-          out(nIn + 3) = Seq(ParseErrorTag)
-        } else {
-          out(nIn) = caps.map(cp => cp.name -> cp.value).toMap
-          out(nIn + 1) = rule.id
-          out(nIn + 2) = rule.ruleClass
-          out(nIn + 3) = rule.tags
-        }
-        new GenericRow(out): Row
-      }
-    }(enc)
-  }
+  /** Annotate `df` with the first-matching rule's captures, one
+    * `Generate` operator for batch and streaming frames (see
+    * [[ParseStage]]); the trie is built once per task.
+    */
+  def annotate(df: DataFrame, textCol: String, rules: Seq[PdbRule]): DataFrame =
+    ParseStage(df, textCol, Parser(rules))
 
   /** Promote every named capture to a typed top-level column (NUMBER →
     * bigint incl. 0x-hex, FLOAT → double), the analog of the reference's

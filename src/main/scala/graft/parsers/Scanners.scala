@@ -5,8 +5,6 @@ import scala.collection.mutable.ArrayBuffer
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -283,131 +281,57 @@ object Scanners {
 
   /** csv-parser() with a full dialect: adds one string column per name
     * plus `<prefix>invalid` (drop-invalid signal; rows are kept + flagged,
-    * never dropped — logmsg.h:105-124 semantics).
+    * never dropped — logmsg.h:105-124 semantics). One `Generate` operator
+    * for batch and streaming frames (see [[ParseStage]]).
     */
   def csvStage(df: DataFrame, textCol: String, names: Seq[String],
       o: CsvOptions, prefix: String = "csv_",
-      partialFill: Boolean = false): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = names.foldLeft(inSchema)((s, n) =>
-      s.add(StructField(n, StringType, nullable = true)))
-      .add(StructField(s"${prefix}invalid", BooleanType, nullable = false))
-    val textIdx = inSchema.fieldIndex(textCol)
-    val nCols = names.length
-    if (df.isStreaming) {
-      // streaming frames cannot lower to an RDD: external-Row path
-      val enc = org.apache.spark.sql.Encoders.row(outSchema)
-      val nIn = inSchema.length
-      return df.mapPartitions { it =>
-        it.map { row =>
-          val text = row.getString(textIdx)
-          val (vals, ok) =
-            if (text == null) (null, false)
-            else if (partialFill) scanCsvPartial(text, nCols, o)
-            else { val v = scanCsv(text, nCols, o); (v, v != null) }
-          val out = new Array[Any](nIn + nCols + 1)
-          var c = 0
-          while (c < nIn) { out(c) = row.get(c); c += 1 }
-          var k = 0
-          while (k < nCols) { out(nIn + k) = if (vals == null) null else vals(k); k += 1 }
-          out(nIn + nCols) = !ok
-          new org.apache.spark.sql.catalyst.expressions.GenericRow(out): org.apache.spark.sql.Row
-        }
-      }(enc)
-    }
-    val inTypes = inSchema.fields.map(_.dataType)
-    val nIn = inSchema.length
-    val rdd = Bridge.toInternalRdd(df).mapPartitions { it =>
-      it.map { row =>
-        val text = if (row.isNullAt(textIdx)) null else row.getUTF8String(textIdx).toString
-        val (vals, ok) =
-          if (text == null) (null, false)
-          else if (partialFill) scanCsvPartial(text, nCols, o)
-          else { val v = scanCsv(text, nCols, o); (v, v != null) }
-        val out = new GenericInternalRow(nIn + nCols + 1)
-        var c = 0
-        while (c < nIn) { out.update(c, row.get(c, inTypes(c))); c += 1 }
+      partialFill: Boolean = false): DataFrame =
+    ParseStage(df, textCol, CsvParser(names, o, prefix, partialFill))
+
+  final case class CsvParser(names: Seq[String], o: CsvOptions, prefix: String,
+      partialFill: Boolean) extends RowParser {
+    def label: String = names.mkString("csv-parser[", ",", "]")
+    def fields: Seq[StructField] =
+      names.map(StructField(_, StringType, nullable = true)) :+
+        StructField(s"${prefix}invalid", BooleanType, nullable = false)
+
+    def parse(textU: UTF8String): InternalRow = {
+      val nCols = names.length
+      val (vals, ok) =
+        if (textU == null) (null, false)
+        else if (partialFill) scanCsvPartial(textU.toString, nCols, o)
+        else { val v = scanCsv(textU.toString, nCols, o); (v, v != null) }
+      val out = new GenericInternalRow(nCols + 1)
+      if (vals != null) {
         var k = 0
-        while (k < nCols) {
-          out.update(nIn + k,
-            if (vals == null || vals(k) == null) null else UTF8String.fromString(vals(k)))
-          k += 1
-        }
-        out.update(nIn + nCols, !ok)
-        out: InternalRow
+        while (k < nCols) { out.update(k, ParseStage.utf8(vals(k))); k += 1 }
       }
+      out.update(nCols, !ok)
+      out
     }
-    Bridge.internalCreateDataFrame(df.sparkSession, rdd, outSchema)
   }
 
   /** kv-parser() with the full scanner: adds `<prefix>fields` (last-wins
-    * map) and `<prefix>stray` (comma-joined stray words).
+    * map, first-seen key order) and `<prefix>stray` (comma-joined stray
+    * words). One `Generate` operator for batch and streaming frames.
     */
   def kvStage(df: DataFrame, textCol: String, o: KvOptions,
-      prefix: String = "kv_"): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = inSchema
-      .add(StructField(s"${prefix}fields",
-        MapType(StringType, StringType, valueContainsNull = false), nullable = false))
-      .add(StructField(s"${prefix}stray", StringType, nullable = false))
-    val textIdx = inSchema.fieldIndex(textCol)
-    if (df.isStreaming) {
-      val enc = org.apache.spark.sql.Encoders.row(outSchema)
-      val nIn = inSchema.length
-      return df.mapPartitions { it =>
-        it.map { row =>
-          val text = row.getString(textIdx)
-          val out = new Array[Any](nIn + 2)
-          var c = 0
-          while (c < nIn) { out(c) = row.get(c); c += 1 }
-          if (text == null) { out(nIn) = Map.empty[String, String]; out(nIn + 1) = "" }
-          else {
-            val (pairs, stray) = scanKv(text, o)
-            // ListMap: last-wins values in FIRST-SEEN key order, matching
-            // the batch path's LinkedHashMap (plain toMap hash-orders >4 keys)
-            out(nIn) = scala.collection.immutable.ListMap(pairs: _*)
-            out(nIn + 1) = stray
-          }
-          new org.apache.spark.sql.catalyst.expressions.GenericRow(out): org.apache.spark.sql.Row
-        }
-      }(enc)
-    }
-    val inTypes = inSchema.fields.map(_.dataType)
-    val nIn = inSchema.length
-    val rdd = Bridge.toInternalRdd(df).mapPartitions { it =>
-      val empty = {
-        val z = new GenericArrayData(Array.empty[Any])
-        new ArrayBasedMapData(z, z)
+      prefix: String = "kv_"): DataFrame =
+    ParseStage(df, textCol, KvParser(o, prefix))
+
+  final case class KvParser(o: KvOptions, prefix: String) extends RowParser {
+    def label: String = "kv-parser"
+    def fields: Seq[StructField] = Seq(
+      StructField(s"${prefix}fields",
+        MapType(StringType, StringType, valueContainsNull = false), nullable = false),
+      StructField(s"${prefix}stray", StringType, nullable = false))
+
+    def parse(textU: UTF8String): InternalRow =
+      if (textU == null) InternalRow(ParseStage.strMap(Nil, Nil), UTF8String.EMPTY_UTF8)
+      else {
+        val (pairs, stray) = scanKv(textU.toString, o)
+        InternalRow(ParseStage.lastWins(pairs), UTF8String.fromString(stray))
       }
-      it.map { row =>
-        val text = if (row.isNullAt(textIdx)) null else row.getUTF8String(textIdx).toString
-        val out = new GenericInternalRow(nIn + 2)
-        var c = 0
-        while (c < nIn) { out.update(c, row.get(c, inTypes(c))); c += 1 }
-        if (text == null) {
-          out.update(nIn, empty)
-          out.update(nIn + 1, UTF8String.EMPTY_UTF8)
-        } else {
-          val (pairs, stray) = scanKv(text, o)
-          // last-wins map, preserving first-seen key order
-          val m = new java.util.LinkedHashMap[String, String]()
-          pairs.foreach { case (k, v) => m.put(k, v) }
-          val keys = new Array[Any](m.size)
-          val values = new Array[Any](m.size)
-          var j = 0
-          val itr = m.entrySet().iterator()
-          while (itr.hasNext) {
-            val e = itr.next()
-            keys(j) = UTF8String.fromString(e.getKey)
-            values(j) = UTF8String.fromString(e.getValue)
-            j += 1
-          }
-          out.update(nIn, new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(values)))
-          out.update(nIn + 1, UTF8String.fromString(stray))
-        }
-        out: InternalRow
-      }
-    }
-    Bridge.internalCreateDataFrame(df.sparkSession, rdd, outSchema)
   }
 }

@@ -4,9 +4,6 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -332,58 +329,38 @@ object SnmpTrapd {
 
   // ------------------------------------------------------------- stage
 
-  /** snmptrapd-parser() as a scan-stage row function: parses `textCol`,
+  /** snmptrapd-parser() as a parse stage (one `Generate` operator for
+    * batch and streaming frames, see [[ParseStage]]): parses `textCol`,
     * DROPS rows whose header does not parse (the reference's FALSE
     * return), and adds:
-    *   - `snmp_fields`: formatted-key → value map, insertion order
-    *     (prefix applied + ':'-runs normalized, snmptrapd-parser.c:103-116)
+    *   - `snmp_fields`: formatted-key → value map, last-wins in first-seen
+    *     key order (prefix applied + ':'-runs normalized,
+    *     snmptrapd-parser.c:103-116)
     *   - `snmp_stamp`: the header timestamp (timestamp_ntz)
     *   - `snmp_program`: "snmptrapd" (snmptrapd-parser.c:199)
     *   - `snmp_message`: the generated `key='value', ...` message, or null
     *     with `setMessageMacro=false` (the reference then UNSETS $MESSAGE)
     */
   def stage(df: DataFrame, textCol: String,
-      prefix: String = ".snmp.", setMessageMacro: Boolean = true): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = inSchema
-      .add(StructField("snmp_fields",
-        MapType(StringType, StringType, valueContainsNull = false), nullable = false))
-      .add(StructField("snmp_stamp", TimestampNTZType, nullable = false))
-      .add(StructField("snmp_program", StringType, nullable = false))
-      .add(StructField("snmp_message", StringType, nullable = true))
-    val textIdx = inSchema.fieldIndex(textCol)
-    val inTypes = inSchema.fields.map(_.dataType)
-    val nIn = inSchema.length
-    val rdd = Bridge.toInternalRdd(df).mapPartitions { it =>
-      it.flatMap { row =>
-        val text = if (row.isNullAt(textIdx)) null else row.getUTF8String(textIdx).toString
-        val parsed = parse(text)
-        if (parsed == null) Iterator.empty
-        else {
-          val out = new GenericInternalRow(nIn + 4)
-          var c = 0
-          while (c < nIn) { out.update(c, row.get(c, inTypes(c))); c += 1 }
-          // last-wins map in first-seen key order (the kvStage precedent)
-          val m = new java.util.LinkedHashMap[String, String]()
-          parsed.values.foreach { case (k, v) => m.put(formatKey(prefix, k), v) }
-          val keys = new Array[Any](m.size)
-          val values = new Array[Any](m.size)
-          var j = 0
-          val itr = m.entrySet().iterator()
-          while (itr.hasNext) {
-            val e = itr.next()
-            keys(j) = UTF8String.fromString(e.getKey)
-            values(j) = UTF8String.fromString(e.getValue)
-            j += 1
-          }
-          out.update(nIn, new ArrayBasedMapData(new GenericArrayData(keys), new GenericArrayData(values)))
-          out.update(nIn + 1, parsed.stampMicros)
-          out.update(nIn + 2, UTF8String.fromString("snmptrapd"))
-          out.update(nIn + 3, if (setMessageMacro) UTF8String.fromString(parsed.message) else null)
-          Iterator.single(out: InternalRow)
-        }
-      }
+      prefix: String = ".snmp.", setMessageMacro: Boolean = true): DataFrame =
+    ParseStage(df, textCol, Parser(prefix, setMessageMacro))
+
+  final case class Parser(prefix: String, setMessageMacro: Boolean) extends RowParser {
+    def label: String = "snmptrapd-parser"
+    def fields: Seq[StructField] = Seq(
+      StructField("snmp_fields",
+        MapType(StringType, StringType, valueContainsNull = false), nullable = false),
+      StructField("snmp_stamp", TimestampNTZType, nullable = false),
+      StructField("snmp_program", StringType, nullable = false),
+      StructField("snmp_message", StringType, nullable = true))
+
+    def parse(text: UTF8String): InternalRow = {
+      val parsed = SnmpTrapd.parse(if (text == null) null else text.toString)
+      if (parsed == null) null
+      else InternalRow(
+        ParseStage.lastWins(parsed.values.map { case (k, v) => formatKey(prefix, k) -> v }),
+        parsed.stampMicros, UTF8String.fromString("snmptrapd"),
+        if (setMessageMacro) UTF8String.fromString(parsed.message) else null)
     }
-    Bridge.internalCreateDataFrame(df.sparkSession, rdd, outSchema)
   }
 }

@@ -3,9 +3,7 @@ package graft.parsers
 import java.time.{LocalDateTime, ZoneId, ZoneOffset}
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.catalyst.util.{ArrayBasedMapData, GenericArrayData}
-import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -587,90 +585,46 @@ object SyslogFormat {
 
   // ------------------------------------------------------------ Spark stage
 
-  private def outFields(prefix: String): Seq[StructField] = Seq(
-    StructField(s"${prefix}pri", IntegerType, nullable = false),
-    StructField(s"${prefix}ts", TimestampNTZType, nullable = false),
-    StructField(s"${prefix}tzofs", IntegerType, nullable = false),
-    StructField(s"${prefix}host", StringType, nullable = false),
-    StructField(s"${prefix}prog", StringType, nullable = false),
-    StructField(s"${prefix}pid", StringType, nullable = false),
-    StructField(s"${prefix}msgid", StringType, nullable = false),
-    StructField(s"${prefix}msg", StringType, nullable = false),
-    StructField(s"${prefix}sdata", MapType(StringType, StringType), nullable = false),
-    StructField(s"${prefix}tags", ArrayType(StringType), nullable = false),
-    StructField(s"${prefix}format", StringType, nullable = false))
-
-  /** The parse as a scan-stage row function (same shape as GrokStage /
-    * Scanners.csvStage): one pass over the partition, InternalRow fast path
-    * for batch frames, external-Row path for streaming frames. The parsed
-    * timestamp lands as timestamp_ntz in the zone the stamp carried (i.e.
-    * its naive wall-clock), with the resolved offset in `<prefix>tzofs`.
-    * Tags are sorted so stage retries re-produce identical arrays.
+  /** syslog-parser() as a parse stage (one `Generate` operator for batch
+    * and streaming frames, see [[ParseStage]]). The parsed timestamp lands as
+    * timestamp_ntz in the zone the stamp carried (i.e. its naive
+    * wall-clock), with the resolved offset in `<prefix>tzofs`. Tags are
+    * sorted so stage retries re-produce identical arrays. A stage re-run
+    * overwrites its earlier output columns ([[ParseStage.dropStale]]).
     */
-  def stage(df0: DataFrame, textCol: String, opt: Options,
+  def stage(df: DataFrame, textCol: String, opt: Options,
       prefix: String = "sl_"): DataFrame = {
-    // re-running the parser (same parser in two log paths, or a mid-pipeline
-    // re-parse) OVERWRITES the previous parse like the reference does —
-    // drop our own stale output columns instead of duplicating names
-    val stale = outFields(prefix).map(_.name).filter(df0.columns.contains)
-    val df = if (stale.isEmpty) df0 else df0.drop(stale: _*)
-    val inSchema = df.schema
-    val outSchema = StructType(inSchema.fields ++ outFields(prefix))
-    val textIdx = inSchema.fieldIndex(textCol)
-    val nIn = inSchema.length
+    val parser = Parser(opt, prefix)
+    ParseStage(ParseStage.dropStale(df, parser), textCol, parser)
+  }
 
-    // naive (ntz) micros of the parsed stamp: shift the epoch micros into
-    // the stamp's own zone so the rendered wall-clock matches the input
-    def ntzMicros(m: Msg): Long = (m.tsSec + m.tzOfs) * 1000000L + m.tsUsec
+  final case class Parser(opt: Options, prefix: String) extends RowParser {
+    def label: String = "syslog-parser"
+    def fields: Seq[StructField] = Seq(
+      StructField(s"${prefix}pri", IntegerType, nullable = false),
+      StructField(s"${prefix}ts", TimestampNTZType, nullable = false),
+      StructField(s"${prefix}tzofs", IntegerType, nullable = false),
+      StructField(s"${prefix}host", StringType, nullable = false),
+      StructField(s"${prefix}prog", StringType, nullable = false),
+      StructField(s"${prefix}pid", StringType, nullable = false),
+      StructField(s"${prefix}msgid", StringType, nullable = false),
+      StructField(s"${prefix}msg", StringType, nullable = false),
+      StructField(s"${prefix}sdata", MapType(StringType, StringType), nullable = false),
+      StructField(s"${prefix}tags", ArrayType(StringType), nullable = false),
+      StructField(s"${prefix}format", StringType, nullable = false))
 
-    if (df.isStreaming) {
-      val enc = org.apache.spark.sql.Encoders.row(outSchema)
-      return df.mapPartitions { it =>
-        it.map { row =>
-          val text = row.getString(textIdx)
-          val m = parse(if (text == null) "" else text, opt)
-          val out = new Array[Any](nIn + 11)
-          var i = 0
-          while (i < nIn) { out(i) = row.get(i); i += 1 }
-          out(nIn) = m.pri
-          out(nIn + 1) = java.time.LocalDateTime.ofEpochSecond(
-            m.tsSec + m.tzOfs, m.tsUsec * 1000, ZoneOffset.UTC)
-          out(nIn + 2) = m.tzOfs
-          out(nIn + 3) = m.host; out(nIn + 4) = m.prog; out(nIn + 5) = m.pid
-          out(nIn + 6) = m.msgid; out(nIn + 7) = m.msg
-          out(nIn + 8) = m.sdata.toMap
-          out(nIn + 9) = m.tags.toSeq.sorted
-          out(nIn + 10) = m.format
-          new org.apache.spark.sql.catalyst.expressions.GenericRow(out): org.apache.spark.sql.Row
-        }
-      }(enc)
+    def parse(text: UTF8String): InternalRow = {
+      val m = SyslogFormat.parse(if (text == null) "" else text.toString, opt)
+      // naive (ntz) micros of the parsed stamp: shift the epoch micros into
+      // the stamp's own zone so the rendered wall-clock matches the input
+      val ntzMicros = (m.tsSec + m.tzOfs) * 1000000L + m.tsUsec
+      InternalRow(m.pri, ntzMicros, m.tzOfs,
+        UTF8String.fromString(m.host), UTF8String.fromString(m.prog),
+        UTF8String.fromString(m.pid), UTF8String.fromString(m.msgid),
+        UTF8String.fromString(m.msg),
+        ParseStage.strMap(m.sdata.map(_._1), m.sdata.map(_._2)),
+        ParseStage.strArray(m.tags.toSeq.sorted),
+        UTF8String.fromString(m.format))
     }
-
-    val inTypes = inSchema.fields.map(_.dataType)
-    val rdd = Bridge.toInternalRdd(df).mapPartitions { it =>
-      it.map { row =>
-        val text = if (row.isNullAt(textIdx)) null else row.getUTF8String(textIdx).toString
-        val m = parse(if (text == null) "" else text, opt)
-        val out = new GenericInternalRow(nIn + 11)
-        var i = 0
-        while (i < nIn) { out.update(i, row.get(i, inTypes(i))); i += 1 }
-        out.update(nIn, m.pri)
-        out.update(nIn + 1, ntzMicros(m))
-        out.update(nIn + 2, m.tzOfs)
-        out.update(nIn + 3, UTF8String.fromString(m.host))
-        out.update(nIn + 4, UTF8String.fromString(m.prog))
-        out.update(nIn + 5, UTF8String.fromString(m.pid))
-        out.update(nIn + 6, UTF8String.fromString(m.msgid))
-        out.update(nIn + 7, UTF8String.fromString(m.msg))
-        out.update(nIn + 8, new ArrayBasedMapData(
-          new GenericArrayData(m.sdata.map(kv => UTF8String.fromString(kv._1)).toArray[Any]),
-          new GenericArrayData(m.sdata.map(kv => UTF8String.fromString(kv._2)).toArray[Any])))
-        out.update(nIn + 9, new GenericArrayData(
-          m.tags.toSeq.sorted.map(UTF8String.fromString).toArray[Any]))
-        out.update(nIn + 10, UTF8String.fromString(m.format))
-        out: org.apache.spark.sql.catalyst.InternalRow
-      }
-    }
-    Bridge.internalCreateDataFrame(df.sparkSession, rdd, outSchema)
   }
 }

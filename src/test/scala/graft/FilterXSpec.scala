@@ -431,6 +431,16 @@ class FilterXSpec extends SparkSpec {
     assertThrows[RuntimeException](FilterX(one, "$x = int(bytes($s));"))
   }
 
+  test("mixed bytes comparison dispatches on the left operand (expr-comparison.c)") {
+    // numeric LHS: numeric comparison, the bytes RHS is unparseable (NaN)
+    assert(!holds("5 < bytes('9')"))
+    assert(!holds("5 == bytes('9')"))
+    assert(holds("5 != bytes('9')"))
+    // bytes LHS and string LHS against bytes keep the raw-byte comparison
+    assert(holds("bytes('9') > 5"))
+    assert(holds("'alma' == bytes($s)"))
+  }
+
   test("protobuf(): retagged bytes — typecasts, istype, hex repr, base64 json, raw-byte cmp") {
     // object-string.c:269-293 filterx_typecast_protobuf: identity on
     // protobuf, bytes → retag; string input is an error (only bytes admits).

@@ -1,14 +1,74 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.AttributeSet
+import org.apache.spark.sql.execution.{FilterExec, GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+
+import graft.parsers.ParseGenerator
+
 /** Scale-shape regression gate: the physical plan of every oracle-checked
   * query must stay the plan we'd want on a 1000-executor cluster. These
   * assertions catch a silent drift back to an n² join or a lost broadcast
   * long before a benchmark would.
   */
-class PlanSpec extends SparkSpec {
+class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
 
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, sfUnit).queryExecution.executedPlan.toString()
+
+  /** The physical plan of `name` before it runs (adaptive wrapper removed). */
+  private def physicalOf(name: String): SparkPlan =
+    SparkEntry.queries(name)(spark, sfUnit).queryExecution.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+
+  private def parseGenerates(p: SparkPlan): Seq[GenerateExec] =
+    p.collect { case g: GenerateExec if g.generator.isInstanceOf[ParseGenerator] => g }
+
+  /** Parse stages per query. Each must plan as exactly one `Generate`;
+    * q_parse_* queries built on Column-expression parsers (FieldParsers)
+    * have none. A new q_parse_* query must declare its count here. */
+  private val parseStages: Map[String, Int] = Map(
+    "q_parse_syslog" -> 1, "q_parse_syslog_hdr" -> 1, "q_parse_cisco" -> 1,
+    "q_parse_errors" -> 1, "q_parse_date" -> 1, "q_parse_csv_quoted" -> 1,
+    "q_parse_kv_quoted" -> 1, "q_parse_snmptrapd" -> 1, "q_parse_patterndb" -> 1,
+    "q_parse_kv" -> 0, "q_parse_json" -> 0, "q_parse_csv" -> 0, "q_parse_rfc5424" -> 0,
+    "q_parse_audit" -> 0, "q_parse_xml" -> 0, "q_parse_tags" -> 0,
+    "q_sink_counts" -> 1)
+
+  /** Queries that filter on a parse output: the filter must exist and sit
+    * above the parse `Generate`. */
+  private val filtersOnParse = Set("q_parse_syslog", "q_parse_errors", "q_parse_date")
+
+  test("parse gate: one Generate per parse stage, no RDD round trip, predicates above it") {
+    // parse plans compare structurally, so a frame another suite cached
+    // (PipelineSpec's flagged frame) would stand in for the parse here as an
+    // InMemoryTableScan: drop caches so this asserts the cold-plan shape
+    spark.sharedState.cacheManager.clearCache()
+    val names = SparkEntry.queries.keys.filter(_.startsWith("q_parse_")).toSeq.sorted :+
+      "q_sink_counts"
+    assert(names.toSet === parseStages.keySet,
+      "every q_parse_* query must declare its parse-stage count")
+    names.foreach { name =>
+      val p = physicalOf(name)
+      assert(!p.toString.contains("ExistingRDD"), s"$name lowers to an RDD:\n$p")
+      val gens = parseGenerates(p)
+      assert(gens.length === parseStages(name),
+        s"$name: expected ${parseStages(name)} parse Generate(s), saw ${gens.length}:\n$p")
+      gens.foreach { g =>
+        val outs = AttributeSet(g.generatorOutput)
+        val onParse = p.collect {
+          case f: FilterExec if f.condition.references.intersect(outs).nonEmpty => f
+        }
+        onParse.foreach(f => assert(f.find(_ eq g).isDefined,
+          s"$name: a predicate on parse outputs sits outside the parse's subtree:\n$p"))
+        if (filtersOnParse(name))
+          assert(onParse.nonEmpty, s"$name: expected a filter on the parse outputs:\n$p")
+      }
+    }
+  }
 
   /** Queries whose plan legitimately contains a broadcast nested-loop or
     * cartesian stage, with the reason it is scale-safe. */
@@ -62,10 +122,28 @@ class PlanSpec extends SparkSpec {
   }
 
   test("post-parse filter/projection stays inside whole-stage codegen") {
-    // the grok output is an ExistingRDD scan; everything above it must fuse
-    // into one codegen stage (the `*(n)` markers in simpleString)
-    val p = planOf("q_parse_syslog")
+    // the parse Generate, the rule_id filter and the projection above it
+    // must fuse into one codegen stage. The plan is adaptive (the
+    // transcript derivation shuffles), so its codegen stages exist only
+    // once it runs: run it and read the final plan.
+    val df = SparkEntry.queries("q_parse_syslog")(spark, sfUnit)
+    df.collect()
+    val plan = df.queryExecution.executedPlan
+    val p = plan.toString()
     assert(p.contains("*("), s"parse pipeline should codegen:\n$p")
+    // one codegen stage's fused subtree (down to its InputAdapter) holds
+    // both the rule_id filter and the parse
+    def fused(n: SparkPlan): Seq[SparkPlan] = n +: (n match {
+      case _: InputAdapter => Nil
+      case other => other.children.flatMap(fused)
+    })
+    val stage = collect(plan) { case w: WholeStageCodegenExec => fused(w.child) }.find { ns =>
+      ns.exists {
+        case f: FilterExec => f.condition.references.exists(_.name == "rule_id")
+        case _ => false
+      } && ns.exists(_.isInstanceOf[GenerateExec])
+    }
+    assert(stage.isDefined, s"parse + rule_id filter should share a codegen stage:\n$p")
   }
 
   test("round-4 corpus queries keep their scan-stage / single-shuffle shapes") {
@@ -97,8 +175,9 @@ class PlanSpec extends SparkSpec {
     assert(nov.contains("BroadcastHashJoin"),
       s"novelty audit must broadcast the bench postings:\n$nov")
     // BFD packing: the packer is an InternalRow stage over a
-    // shard-repartitioned sort, so its shard Exchange lives BELOW the
-    // ExistingRDD boundary (same as the grok stage); the visible plan must
+    // shard-repartitioned sort (it depends on row order within a
+    // partition, so it stays on the RDD path), so its shard Exchange lives
+    // BELOW the ExistingRDD boundary; the visible plan must
     // add NO further key shuffle — everything above the stage is a pure
     // projection
     val bfd = planOf("q_corpus_pack_bfd")
@@ -231,13 +310,13 @@ class PlanSpec extends SparkSpec {
       val p = planOf(q)
       assert(keyShuffles(p) === 0, s"$q must not key-shuffle:\n$p")
     }
-    // snmptrapd: an InternalRow scan stage (the grok precedent); the
-    // visible plan adds no key shuffle above it
-    val sn = planOf("q_parse_snmptrapd")
-    assert(sn.contains("Scan ExistingRDD"),
-      s"snmptrapd parse should be an InternalRow stage:\n$sn")
-    assert(keyShuffles(sn) === 0,
-      s"no key shuffle above the parse stage, saw ${keyShuffles(sn)}:\n$sn")
+    // snmptrapd: one parse Generate (the parse gate above); the only key
+    // shuffle is the transcript derivation's, below it — none above it
+    val sn = physicalOf("q_parse_snmptrapd")
+    val snParse = parseGenerates(sn).head
+    val snShuffles = sn.collect { case e: ShuffleExchangeExec => e }
+    assert(snShuffles.forall(e => snParse.find(_ eq e).isDefined),
+      s"no key shuffle above the parse stage:\n$sn")
     // WordPiece scoring: the alphabet-sized symbol counts BROADCAST onto
     // the pair counts; key shuffles are the two count aggregates + the
     // top-k sort boundary, never a corpus-keyed join

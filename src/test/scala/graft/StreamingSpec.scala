@@ -347,20 +347,53 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
-  test("kv scanner FSM on a stream (Row path)") {
+  test("every parse stage gives the same rows on a stream as on a batch frame") {
     implicit val sqlCtx = spark.sqlContext
-    // kv scanner FSM on a stream (Row path)
-    val input2 = MemoryStream[Turn]
-    val kvq = graft.parsers.Scanners.kvStage(
-      input2.toDS().toDF(), "text",
-      graft.parsers.Scanners.KvOptions(extractStrayWords = true))
-      .select(col("kv_fields")("msg").as("m"), col("kv_stray"))
-      .writeStream.format("memory").queryName("kvstream").start()
-    try {
-      input2.addData(turn("a", 0, 0, text = "boot msg='hello world' n=2"))
-      kvq.processAllAvailable()
-      val r = spark.table("kvstream").as[(String, String)].head()
-      assert(r === (("hello world", "boot")))
-    } finally kvq.stop()
+    import org.apache.spark.sql.{DataFrame, Row}
+    import graft.parsers._
+    val opt = SyslogFormat.Options(nowEpochUsec = 1549615069123000L)
+    val stages: Seq[(String, DataFrame => DataFrame)] = Seq(
+      "grok" -> (GrokStage(_, "text", GrokStage.transcriptRules)),
+      "patterndb" -> (PatternDb.annotate(_, "text", PatternDb.transcriptRules)),
+      "syslog" -> (SyslogFormat.stage(_, "text", opt)),
+      "cisco" -> (CiscoParser.stage(_, "text", opt)),
+      "csv" -> (Scanners.csvStage(_, "text", Seq("c1", "c2", "c3"),
+        Scanners.CsvOptions(dialect = Scanners.EscapeDoubleChar))),
+      "kv" -> (Scanners.kvStage(_, "text", Scanners.KvOptions(extractStrayWords = true))),
+      "snmptrapd" -> (SnmpTrapd.stage(_, "text")))
+    val texts = Seq(
+      "<13>Mar  3 10:11:12 host-1 bash[42]: action=run status=ok",
+      "event=tool_call tool=bash duration_ms=77 ok=true",
+      "boot msg='hello world' n=2",
+      "<189>29: foo: *Apr 29 13:58:40.411: %SYS-5-CONFIG_I: Configured",
+      "conv-1,\"a, \"\"b\"\"\",x",
+      "2017-11-10 13:23:16 host9 [UDP: [10.0.0.1]:53831->[10.0.0.2]:162]: iso.9\n" +
+        "\t Cold Start Trap (0) Uptime: 1:02:03.04\n" +
+        "NET-SNMP-MIB::val = INTEGER: 7",
+      "~~CORRUPT#1##",
+      null)
+    val turns = texts.zipWithIndex.map { case (t, i) => turn("a", i, i, text = t) }
+    def sorted(rows: Array[Row]) = rows.toSeq.sortBy(_.getAs[Int]("turn_idx"))
+    stages.foreach { case (name, stage) =>
+      val input = MemoryStream[Turn]
+      val q = stage(input.toDS().toDF())
+        .writeStream.format("memory").queryName(s"parse_eq_$name").start()
+      try {
+        input.addData(turns: _*)
+        q.processAllAvailable()
+        val streamed = sorted(spark.table(s"parse_eq_$name").collect())
+        val batch = sorted(stage(turns.toDF()).collect())
+        assert(streamed.nonEmpty && streamed === batch, s"$name: stream != batch")
+        name match {
+          case "kv" =>
+            val r = streamed.find(_.getAs[Int]("turn_idx") == 2).get
+            assert(r.getAs[Map[String, String]]("kv_fields")("msg") === "hello world")
+            assert(r.getAs[String]("kv_stray") === "boot")
+          case "snmptrapd" => // rows whose header does not parse are dropped
+            assert(streamed.map(_.getAs[Int]("turn_idx")) === Seq(5))
+          case _ => assert(streamed.length === texts.length)
+        }
+      } finally q.stop()
+    }
   }
 }
