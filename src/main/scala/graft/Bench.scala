@@ -142,7 +142,13 @@ object Bench {
     assign.filter(col("member_id") === col("keep_id")).count()
   }
 
-  def main(args: Array[String]): Unit = {
+  /** A query that throws fails the run with a non-zero exit: it is never
+    * timed as a fast run, and no JSON line is printed. */
+  def main(args: Array[String]): Unit =
+    try run()
+    catch { case e: Throwable => e.printStackTrace(); sys.exit(1) }
+
+  private def run(): Unit = {
     new java.io.File("/dev/shm/spark-local").mkdirs()
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
@@ -154,8 +160,7 @@ object Bench {
     // ---- headline query timings at full parallelism ----
     var spark = newSession(cpus)
     // JVM/codegen warmup so the first timed query isn't charged for it
-    try SparkEntry.queries("q_sink_counts")(spark, sfDir).count()
-    catch { case _: Throwable => () }
+    SparkEntry.queries("q_sink_counts")(spark, sfDir).count()
     // min over 2 runs per query, INTERLEAVED: pass 1 over the whole list,
     // then pass 2 over the whole list, min per query. Back-to-back repeats
     // put a query's two samples inside the same few-second window, so one
@@ -166,7 +171,7 @@ object Bench {
     def queryPass(): Seq[(String, Double)] = {
       def timed(f: => Unit): Double = {
         val t0 = System.nanoTime()
-        try f catch { case _: Throwable => () }
+        f
         (System.nanoTime() - t0) / 1e9
       }
       headline.map { name =>

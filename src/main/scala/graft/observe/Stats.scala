@@ -5,6 +5,7 @@ import scala.collection.mutable
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.execution.QueryExecution
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.util.QueryExecutionListener
 
 /** The stats subsystem (reference lib/stats/): per-stage counters collected
@@ -31,10 +32,14 @@ object Stats {
   /** Collects observed metrics from every completed action on the session.
     * Rows carry a wall-clock stamp so the periodic aggregators (average /
     * maximum / change-per-second) can run over successive snapshots — ops
-    * metrics, never oracle-checked data.
+    * metrics, never oracle-checked data. A failed action adds one
+    * `(action, failed, 1, <function>)` row.
     */
   final class Collector extends QueryExecutionListener {
     private val buf = mutable.ArrayBuffer.empty[(String, String, Long, String, Long)]
+
+    private def record(rows: Seq[(String, String, Long, String, Long)]): Unit =
+      buf.synchronized { buf ++= rows; () }
 
     override def onSuccess(funcName: String, qe: QueryExecution, durationNs: Long): Unit = {
       val now = System.currentTimeMillis()
@@ -48,11 +53,12 @@ object Stats {
             }
             (name.stripPrefix("graft."), f, v, funcName, now)
           }.toSeq
-      }.flatten
-      buf.synchronized { buf ++= rows; () }
+      }.flatten.toSeq
+      if (rows.nonEmpty) record(rows)
     }
 
-    override def onFailure(funcName: String, qe: QueryExecution, ex: Exception): Unit = ()
+    override def onFailure(funcName: String, qe: QueryExecution, ex: Exception): Unit =
+      record(Seq(("action", "failed", 1L, funcName, System.currentTimeMillis())))
 
     def snapshot(spark: SparkSession): DataFrame = {
       val rows = buf.synchronized(buf.toSeq)
@@ -67,6 +73,7 @@ object Stats {
       rows.toDF("stage", "counter", "value", "job", "ts_ms")
     }
 
+    /** Drops the collected rows. */
     def clear(): Unit = buf.synchronized { buf.clear(); () }
   }
 
@@ -122,6 +129,21 @@ object Stats {
           (max_by(col("value"), col("ts_ms")) - min_by(col("value"), col("ts_ms"))) * 1000.0 /
             nullif(max(col("ts_ms")) - min(col("ts_ms")), lit(0L)),
           lit(0.0)).as("cps"))
+
+  private val ReportTimeoutMs = 60000L
+
+  /** Waits until every action that has returned on this session has
+    * reported to the installed collectors. Spark delivers listener events
+    * asynchronously, after the action returned (and possibly after an
+    * `Observation` on the same action saw it), so a snapshot is only
+    * complete, and no event of these actions can reach a collector
+    * installed later, once the listener bus is drained. An action that
+    * failed before it started executing posts no event and is not waited
+    * for. False if the bus is still busy after 60 s; an event the bus
+    * dropped (its queue was full) is logged by Spark and never arrives.
+    */
+  def awaitReports(spark: SparkSession): Boolean =
+    Bridge.awaitListenerBus(spark, ReportTimeoutMs)
 
   /** Install a collector on the session (idempotent per collector). */
   def install(spark: SparkSession): Collector = {

@@ -1,5 +1,7 @@
 package graft.routing
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
@@ -56,15 +58,17 @@ object Router {
     val fallbackFlags = specs.filter(_.isFallback).map { s =>
       s.name -> (coalesce(s.predicate, lit(false)) && !anyNonFallback)
     }
-    val flagByName = (nonFallbackFlags ++ fallbackFlags).toMap
-    val withFlags = specs.foldLeft(df) { (acc, s) =>
-      acc.withColumn(s"route_${s.name}", coalesce(flagByName(s.name), lit(false)))
-    }
-    withFlags.withColumn(
-      "routes",
-      filter(
-        array(specs.map(s => when(col(s"route_${s.name}"), lit(s.name))): _*),
-        x => x.isNotNull))
+    val flags = (nonFallbackFlags ++ fallbackFlags).toMap
+    // every flag in one projection (one analysis, not one per column);
+    // `routes` reads the flag columns from a second one, so the optimizer
+    // keeps the predicates (the `rlike` among them) out of `routes`
+    df.withColumns(ListMap(specs.map(s =>
+        s"route_${s.name}" -> coalesce(flags(s.name), lit(false))): _*))
+      .withColumn(
+        "routes",
+        filter(
+          array(specs.map(s => when(col(s"route_${s.name}"), lit(s.name))): _*),
+          x => x.isNotNull))
   }
 
   /** Per-sink view (the multiplexer fan-out): call after `withRouteFlags`;

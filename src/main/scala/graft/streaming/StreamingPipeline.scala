@@ -251,6 +251,9 @@ object StreamingPipeline {
     * batchId-idempotence claim: a batch killed between two sink writes and
     * replayed on restart leaves no duplicate rows in any (sink, batch_id)
     * partition — the replay dynamically overwrites its own partition.
+    * Unlike the batch `Pipeline.writeSinks`, the sinks are written one after
+    * another: `afterSink` and the crash-recovery tests built on it depend on
+    * that order.
     */
   def writeSinksBatch(
       batch: DataFrame,

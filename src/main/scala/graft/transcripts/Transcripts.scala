@@ -1,6 +1,8 @@
 package graft.transcripts
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.graftbridge.Bridge
+import org.apache.spark.sql.types.StructType
 
 /** The canonical input table of the engine: multi-turn conversation/agent
   * transcripts `(conv_id, turn_idx, role, text, tool, ts)`.
@@ -80,19 +82,30 @@ object Transcripts {
     */
   def oracle(select: String): String = cte("duckdb") + "\n" + select
 
-  private def registerEvents(spark: SparkSession, sfDir: String): Unit =
-    spark.read.parquet(s"$sfDir/events.parquet").createOrReplaceTempView("events")
+  /** The `events` columns the derivation reads, as Spark infers them from
+    * the generated parquet (naive timestamps load as `TIMESTAMP_NTZ`).
+    * Declaring them skips the footer-inference job every read would run.
+    */
+  val eventsSchema: StructType =
+    StructType.fromDDL("event_id BIGINT, ts TIMESTAMP_NTZ, user_id BIGINT")
 
-  /** The 6-column transcript table (input_hint schema). */
+  private def registerEvents(spark: SparkSession, sfDir: String): Unit =
+    spark.read.schema(eventsSchema).parquet(s"$sfDir/events.parquet")
+      .createOrReplaceTempView("events")
+
+  /** The 6-column transcript table (input_hint schema). Every CTE of the
+    * derivation is read once, so the frame comes back inlined: frames built
+    * on it do not re-analyze the `WITH` chain.
+    */
   def load(spark: SparkSession, sfDir: String): DataFrame = {
     registerEvents(spark, sfDir)
-    spark.sql(cte("spark") + "\nSELECT * FROM transcripts")
+    Bridge.inlineCtes(spark.sql(cte("spark") + "\nSELECT * FROM transcripts"))
   }
 
   /** Transcripts + generator ground truth (for internal tests only). */
   def loadFull(spark: SparkSession, sfDir: String): DataFrame = {
     registerEvents(spark, sfDir)
-    spark.sql(cte("spark") + "\nSELECT * FROM transcripts_full")
+    Bridge.inlineCtes(spark.sql(cte("spark") + "\nSELECT * FROM transcripts_full"))
   }
 
   /** Run a Spark-dialect SQL SELECT over the derived CTEs. */

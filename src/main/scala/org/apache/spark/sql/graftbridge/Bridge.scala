@@ -1,10 +1,13 @@
 package org.apache.spark.sql.graftbridge
 
+import java.util.concurrent.TimeoutException
+
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.classic.ExpressionUtils
+import org.apache.spark.sql.catalyst.optimizer.InlineCTE
+import org.apache.spark.sql.classic.{Dataset, ExpressionUtils}
 import org.apache.spark.sql.types.StructType
 
 /** Spark 4 removed the public `new Column(Expression)` constructor; the
@@ -29,4 +32,33 @@ object Bridge {
   /** The analyzed InternalRow RDD of a DataFrame. */
   def toInternalRdd(df: DataFrame): RDD[InternalRow] =
     df.queryExecution.toRdd
+
+  /** The same rows with every CTE reference replaced by its definition.
+    * A frame built over an analyzed `WITH` plan re-runs CTE analysis
+    * (`InlineCTE`, `DeduplicateRelations`, `CheckAnalysis`) on each
+    * derived DataFrame; inlining once up front leaves a plain plan. Only
+    * for CTEs referenced once: a CTE read twice would be computed twice.
+    */
+  def inlineCtes(df: DataFrame): DataFrame = {
+    val qe = df.queryExecution
+    Dataset.ofRows(qe.sparkSession, InlineCTE(alwaysInline = true)(qe.analyzed))
+  }
+
+  /** A frame whose plan is `df`'s cache entry (`df` must be persisted):
+    * frames built over it analyze and plan one `InMemoryRelation` leaf
+    * instead of the whole lineage below the cache.
+    */
+  def cachedLeaf(df: DataFrame): DataFrame = {
+    val qe = df.queryExecution
+    Dataset.ofRows(qe.sparkSession, qe.withCachedData)
+  }
+
+  /** Waits until the session's listener bus has delivered every event
+    * posted so far (Spark posts an action's completion event before the
+    * action returns, and delivers it later on a bus thread). False if the
+    * bus is not empty after `timeoutMs`.
+    */
+  def awaitListenerBus(spark: SparkSession, timeoutMs: Long): Boolean =
+    try { spark.sparkContext.listenerBus.waitUntilEmpty(timeoutMs); true }
+    catch { case _: TimeoutException => false }
 }

@@ -1,8 +1,11 @@
 package graft
 
-import java.nio.file.Files
+import java.io.File
+import java.nio.file.{Files, Paths}
 
 import org.apache.spark.sql.functions._
+import org.scalatest.concurrent.Eventually._
+import org.scalatest.time.SpanSugar._
 
 /** Observability: per-stage counters via observe() into the stats table,
   * and per-partition lineage on sink rows (reference lib/stats + north
@@ -26,6 +29,11 @@ class StatsSpec extends SparkSpec {
     assert(parseErr.nonEmpty && parseErr.forall(_._3 > 0)) // corrupt lines exist
     // per-sink stages observed with their own counts
     assert(stats.exists(s => s._1 == "sink_errors" && s._2 == "processed"))
+    // 19 rows, always: each of the 4 sink writes reports the 3 flagged
+    // counters (read through the cache) and its own `processed`; the
+    // aggregate write reports the 3 flagged counters. The snapshot waits
+    // until the listener bus has delivered all five, so none is missing.
+    assert(stats.length === 19)
 
     val allRows = spark.read.parquet(s"$out/sink_all")
     assert(allRows.columns.contains("lineage"))
@@ -38,6 +46,49 @@ class StatsSpec extends SparkSpec {
       .select("stage").distinct().as[String].collect().toSet
     assert(q === Set("sink_all", "sink_tool_calls", "sink_errors", "sink_fallback"))
     assert(graft.observe.Stats.query(sdf, "*.parse_errors").count() > 0)
+  }
+
+  test("back-to-back writeSinks calls give identical stats tables") {
+    val runs = (1 to 10).map { _ =>
+      val out = Files.createTempDirectory("graft-stats-rerun").toString
+      Pipeline.writeSinks(spark, sfUnit, out)
+      spark.read.parquet(s"$out/stats").select("stage", "counter", "value")
+        .as[(String, String, Long)].collect().toSeq.sorted
+    }
+    assert(runs.head.size === 19)
+    runs.zipWithIndex.foreach { case (r, i) => assert(r === runs.head, s"call ${i + 1}") }
+  }
+
+  test("a failed sink write: started writes joined, cache released, failure recorded") {
+    spark.catalog.clearCache()
+    val out = Files.createTempDirectory("graft-sink-fail").toString
+    // sink_errors resolves to a path below a regular file: its write fails
+    val blocker = new File(out, "blocker")
+    assert(blocker.createNewFile())
+    Files.createSymbolicLink(Paths.get(out, "sink_errors"), Paths.get(blocker.getPath, "dir"))
+    val collector = graft.observe.Stats.install(spark)
+    try {
+      intercept[Exception](Pipeline.writeSinks(spark, sfUnit, out))
+      // every other write had committed before writeSinks threw
+      for (d <- Seq("sink_all", "sink_tool_calls", "sink_fallback", "agg_counts"))
+        assert(new File(s"$out/$d/_SUCCESS").exists(), d)
+      assert(!new File(s"$out/stats").exists())
+      assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+        .sharedState.cacheManager.isEmpty, "the flagged frame is unpersisted")
+      // job-end events reach the status tracker through the listener bus
+      eventually(timeout(30.seconds)) {
+        assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
+      }
+      // four writes reported counters, one failed
+      assert(graft.observe.Stats.awaitReports(spark))
+      val failed = collector.snapshot(spark).filter(col("stage") === "action")
+        .as[(String, String, Long, String)].collect()
+      assert(failed.length === 1)
+      assert(failed.head._2 === "failed" && failed.head._3 === 1L && failed.head._4.nonEmpty)
+    } finally spark.listenerManager.unregister(collector)
+
+    Files.delete(Paths.get(out, "sink_errors"))
+    assert(Pipeline.writeSinksResumable(spark, sfUnit, out) === Set("errors"))
   }
 
   test("stats exposition: CSV + Prometheus golden strings; glob query") {

@@ -14,6 +14,14 @@ class TranscriptsSpec extends SparkSpec {
     assert(types("ts") == "timestamp" || types("ts") == "timestamp_ntz")
   }
 
+  test("declared events schema equals the inferred one on the columns it reads") {
+    for (sf <- Seq(sfUnit, "/root/testdata/sf0.01")) {
+      val inferred = spark.read.parquet(s"$sf/events.parquet")
+        .select(Transcripts.eventsSchema.fieldNames.toSeq.map(col): _*).schema
+      assert(inferred === Transcripts.eventsSchema, sf)
+    }
+  }
+
   test("deterministic: two loads are identical") {
     val a = Transcripts.load(spark, sfUnit).orderBy("conv_id", "turn_idx").collect()
     val b = Transcripts.load(spark, sfUnit).orderBy("conv_id", "turn_idx").collect()
