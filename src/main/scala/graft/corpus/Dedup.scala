@@ -15,6 +15,7 @@ import org.apache.spark.sql.functions._
   * differ between engines).
   */
 object Dedup {
+  import Candidates._
 
   /** Words → word k-shingles (space-joined), distinct. Empty when the doc
     * has fewer than k words. One tight per-row pass
@@ -55,27 +56,6 @@ object Dedup {
     */
   private val MinhashPrime = 1000000007L // small enough that the sum wraps
 
-  /** MinHash + LSH banding near-duplicate pairs.
-    *
-    * numHashes signatures in bands of rowsPerBand; docs sharing any band
-    * bucket become candidates; candidates are verified with exact Jaccard ≥
-    * threshold (LSH is candidate generation only — semantics are the
-    * Jaccard threshold, LSH is the scale path that avoids the n² compare).
-    *
-    * Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
-    */
-  /** Shingle table (docs with ≥ k words only): the verification side of the
-    * LSH joins and the per-doc payload the incremental index persists. The
-    * pre-filter is on word count (≡ "has shingles", but cheap): a filter on
-    * the shingle array itself would be pushed below the scan's exchange and
-    * build every shingle set serially on the (often single) input split.
-    */
-  private def shingleTable(docs: DataFrame, id: Column, text: Column,
-      shingleK: Int): DataFrame =
-    docs
-      .filter(size(split(text, " ")) >= shingleK)
-      .select(id.as("doc_id"), shingles(text, shingleK).as("sh"))
-
   /** (doc_id, band, bucket) MinHash band table. Band hash = md5 over the
     * band's signature slice. Only these id-sized rows ever shuffle — never
     * the shingle arrays: at corpus scale the payload dominates, so
@@ -83,19 +63,17 @@ object Dedup {
     * for surviving candidate pairs.
     */
   private def bandTable(sh: DataFrame, numHashes: Int, rowsPerBand: Int): DataFrame = {
-    val numBands = numHashes / rowsPerBand
     val sig = sh.select(col("doc_id"),
       graft.functions.GraftFunctions.minhash_sig(col("sh"), numHashes, MinhashPrime).as("sigs"))
-    sig.select(col("doc_id"),
-      explode(array((0 until numBands).map { b =>
-        struct(lit(b).as("band"),
-          md5(concat_ws("|",
-            (0 until rowsPerBand).map(r =>
-              element_at(col("sigs"), b * rowsPerBand + r + 1).cast("string")): _*))
-            .as("bucket"))
-      }: _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band"), col("bb.bucket"))
+    bandRows(sig, numHashes / rowsPerBand)(b =>
+      md5(concat_ws("|", (0 until rowsPerBand).map(r =>
+        element_at(col("sigs"), b * rowsPerBand + r + 1).cast("string")): _*)))
   }
+
+  /** Verified MinHash pairs over a shingle table and its band table:
+    * candidates deduplicate before the (payload-joining) Jaccard verify. */
+  private def lshPairs(sh: DataFrame, bands: DataFrame, threshold: Double): DataFrame =
+    verifyJaccard(bandPairs(bands, bands).dropDuplicates("doc_a", "doc_b"), sh, sh, threshold)
 
   /** Plan (numHashes, rowsPerBand) for [[minhashLsh]] from the target
     * similarity threshold and a recall floor AT that threshold: the LSH
@@ -125,6 +103,15 @@ object Dedup {
         s"recall $recallAtThreshold at jaccard $threshold — raise maxHashes"))
   }
 
+  /** MinHash + LSH banding near-duplicate pairs.
+    *
+    * numHashes signatures in bands of rowsPerBand; docs sharing any band
+    * bucket become candidates; candidates are verified with exact Jaccard ≥
+    * threshold (LSH is candidate generation only — semantics are the
+    * Jaccard threshold, LSH is the scale path that avoids the n² compare).
+    *
+    * Returns (doc_a, doc_b, jaccard) with doc_a < doc_b.
+    */
   def minhashLsh(
       docs: DataFrame,
       id: Column,
@@ -134,25 +121,14 @@ object Dedup {
       rowsPerBand: Int = 2,
       threshold: Double = 0.5): DataFrame = {
     val sh = shingleTable(docs, id, text, shingleK)
-    val bands = bandTable(sh, numHashes, rowsPerBand)
-    val cand = bands.select(col("band"), col("bucket"), col("doc_id").as("doc_a"))
-      .join(bands.select(col("band"), col("bucket"), col("doc_id").as("doc_b")),
-        Seq("band", "bucket"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .dropDuplicates("doc_a", "doc_b")
-    verifyJaccard(cand, sh, threshold)
+    lshPairs(sh, bandTable(sh, numHashes, rowsPerBand), threshold)
   }
 
-  /** Join candidate id-pairs back to their shingle sets and keep pairs with
-    * exact Jaccard ≥ threshold. The doc→shingles side is re-read per join;
-    * at scale, hint-broadcast it if the corpus dimension fits, else this is
-    * two hash joins on doc id.
-    */
-  private def verifyJaccard(cand: DataFrame, sh: DataFrame, threshold: Double): DataFrame =
-    cand
-      .join(sh.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(sh.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
+  /** Join candidate id-pairs back to their shingle sets (`left` for doc_a,
+    * `right` for doc_b) and keep pairs with exact Jaccard ≥ threshold. */
+  private def verifyJaccard(cand: DataFrame, left: DataFrame, right: DataFrame,
+      threshold: Double): DataFrame =
+    verifyJoin(cand, left, right)
       .withColumn("jaccard", jaccard(col("sh_a"), col("sh_b")))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
@@ -161,13 +137,9 @@ object Dedup {
     size(array_intersect(a, b)).cast("double") /
       size(array_union(a, b)).cast("double")
 
-  /** Exact n-gram Jaccard pairs with PPJoin-style prefix filtering.
-    *
-    * Shingles get a global canonical order (md5 lex order); a set of size n
-    * only posts its first `n − ⌈t·n⌉ + 1` shingles. Two sets with Jaccard ≥
-    * t are guaranteed to share a posted shingle (prefix-filtering
-    * principle — lossless for the threshold), so the posting join emits a
-    * strict superset of the qualifying pairs at a fraction of the shuffle;
+  /** Exact n-gram Jaccard pairs with PPJoin-style prefix filtering
+    * ([[Candidates.prefixPostings]]): the posting join emits a lossless
+    * superset of the qualifying pairs at a fraction of the shuffle;
     * candidates then verify with the exact Jaccard. Candidate generation
     * shuffles (shingle, id) only — never the shingle arrays.
     *
@@ -182,22 +154,14 @@ object Dedup {
       text: Column,
       shingleK: Int = 3,
       threshold: Double = 0.5): DataFrame = {
-    val sh = docs
-      .filter(size(split(text, " ")) >= shingleK) // cheap ≡ of "has shingles"
-      .select(id.as("doc_id"), shingles(text, shingleK).as("sh"))
-    // canonical order by seeded hash (uniform, frequency-independent)
-    val ordered = transform(
-      array_sort(transform(col("sh"), s => struct(md5(concat(lit("ord:"), s)).as("h"), s.as("s")))),
-      x => x("s"))
-    val prefixLen = (size(col("sh")) - ceil(size(col("sh")) * threshold) + 1).cast("int")
-    val posting = sh
-      .select(col("doc_id"), explode(slice(ordered, lit(1), prefixLen)).as("shingle"))
+    val sh = shingleTable(docs, id, text, shingleK)
+    val posting = prefixPostings(sh, threshold)
     val cand = posting.as("a")
       .join(posting.as("b"), col("a.shingle") === col("b.shingle"))
       .filter(col("a.doc_id") < col("b.doc_id"))
       .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"))
       .dropDuplicates("doc_a", "doc_b")
-    verifyJaccard(cand, sh, threshold)
+    verifyJaccard(cand, sh, sh, threshold)
   }
 
   /** Cross-source SUBTRACTION dedup — remove from `docs` everything that
@@ -234,30 +198,17 @@ object Dedup {
       .groupBy("__ch").agg(min(col("__t")).as("__t"))
     val repR = ref.select(contentHash(refText).as("__ch"), refText.as("__t"))
       .groupBy("__ch").agg(min(col("__t")).as("__t"))
-    def shTable(rep: DataFrame) = rep
-      .filter(size(split(col("__t"), " ")) >= shingleK)
-      .select(col("__ch").as("doc_id"), shingles(col("__t"), shingleK).as("sh"))
-    def prefixPosting(sh: DataFrame) = {
-      val ordered = transform(
-        array_sort(transform(col("sh"),
-          s => struct(md5(concat(lit("ord:"), s)).as("h"), s.as("s")))),
-        x => x("s"))
-      val prefixLen = (size(col("sh")) - ceil(size(col("sh")) * threshold) + 1).cast("int")
-      sh.select(col("doc_id"), explode(slice(ordered, lit(1), prefixLen)).as("shingle"))
-    }
+    def shTable(rep: DataFrame) = shingleTable(rep, col("__ch"), col("__t"), shingleK)
     val shD = shTable(repD)
     val shR = shTable(repR)
-    val cand = prefixPosting(shD).select(col("doc_id").as("doc_a"), col("shingle"))
-      .join(prefixPosting(shR).select(col("doc_id").as("doc_b"), col("shingle")),
+    val cand = prefixPostings(shD, threshold).select(col("doc_id").as("doc_a"), col("shingle"))
+      .join(prefixPostings(shR, threshold).select(col("doc_id").as("doc_b"), col("shingle")),
         Seq("shingle"))
       .select("doc_a", "doc_b").dropDuplicates("doc_a", "doc_b")
     // verify against each SIDE's own shingle table (a content present in
     // both corpora keys the same hash but may normalize-differ in case —
     // the sides must not share representatives)
-    val nearCh = cand
-      .join(shD.select(col("doc_id").as("doc_a"), col("sh").as("sh_a")), Seq("doc_a"))
-      .join(shR.select(col("doc_id").as("doc_b"), col("sh").as("sh_b")), Seq("doc_b"))
-      .filter(jaccard(col("sh_a"), col("sh_b")) >= threshold)
+    val nearCh = verifyJaccard(cand, shD, shR, threshold)
       .select(col("doc_a").as("__nch")).distinct()
     base
       .join(refH.withColumn("__ex", lit(true)), Seq("__ch"), "left")
@@ -291,13 +242,10 @@ object Dedup {
   def containmentPairs(
       docs: DataFrame, id: Column, text: Column,
       shingleK: Int = 3, threshold: Double = 0.8): DataFrame = {
-    val sh = docs
-      .filter(size(split(text, " ")) >= shingleK)
-      .select(id.as("doc_id"), shingles(text, shingleK).as("sh"))
+    val sh = shingleTable(docs, id, text, shingleK)
     val sizes = sh.select(col("doc_id").as("doc_a"),
       size(col("sh")).cast("long").as("n_a"))
-    val posts = sh.select(col("doc_id"), explode(col("sh")).as("g"))
-      .select(col("doc_id"), md5(col("g")).as("gh"))
+    val posts = postings(sh)
     posts.as("a")
       .join(posts.as("b"),
         col("a.gh") === col("b.gh") && col("a.doc_id") =!= col("b.doc_id"))
@@ -415,50 +363,21 @@ object Dedup {
       .agg(count(lit(1)).as("n_clusters"), sum(col("n")).as("n_docs"))
   }
 
-  /** The canonical corpus dedup pass, composed end-to-end: exact duplicate
-    * pairs (same normalized content) ∪ MinHash-LSH near-dup pairs →
-    * connected components → keep only each cluster's minimum-id survivor.
-    * Returns the surviving rows of `docs`, unchanged schema — the "drop
-    * the duplicates" operation a training-data pipeline actually runs.
-    *
-    * Scale shape: one content-hash aggregate (exact pairs come from the
-    * hash groups, never a text self-join), the id-only LSH band shuffle,
-    * O(log diameter) component rounds, and one final semi-join of
-    * survivors back to the corpus.
-    */
-  /** LSH near-dup pairs among the distinct-content REPRESENTATIVES (min
-    * doc_id per content hash) only. Identical texts have identical MinHash
-    * signatures, so banding every member of an exact-duplicate group makes
-    * the band join QUADRATIC in the group size — a 10⁸-copy viral page is
-    * 10¹⁶ candidate pairs. Banding one representative per distinct text is
-    * provably lossless for the clustering: any member-member band collision
-    * is signature-determined, so it exists iff the rep-rep collision does,
-    * and the content star edges ([[exactEdges]]) carry the members.
-    */
-  private def repNearPairs(
-      docs: DataFrame, id: Column, text: Column, hashed: DataFrame,
-      shingleK: Int, threshold: Double): DataFrame = {
-    val repIds = hashed.groupBy(col("h")).agg(min(col("doc_id")).as("__rep_id"))
-      .select(col("__rep_id"))
-    val repDocs = docs.withColumn("__did", id)
-      .join(repIds, col("__did") === col("__rep_id"), "left_semi")
-      .drop("__did")
-    minhashLsh(repDocs, id, text, shingleK, threshold = threshold)
-      .select(col("doc_a"), col("doc_b"))
-  }
-
   /** The viral-duplicate-safe edge set for near-dup clustering: content
-    * star edges ∪ LSH pairs among distinct-content representatives — feed
-    * to [[resolveClusters]]. Same components as banding every doc (see
-    * [[repNearPairs]]), without the quadratic band join on exact-duplicate
-    * groups.
+    * star edges ∪ LSH pairs among the distinct-content representatives (min
+    * doc_id per content hash) — feed to [[resolveClusters]]. Same components
+    * as banding every doc, without the quadratic band join on
+    * exact-duplicate groups: any member-member band collision is
+    * signature-determined, so it exists iff the rep-rep collision does, and
+    * the star edges carry the members ([[Candidates.repDocs]]).
     */
   def corpusEdges(
       docs: DataFrame, id: Column, text: Column,
       shingleK: Int = 3, threshold: Double = 0.5): DataFrame = {
-    val hashed = docs.select(id.as("doc_id"), contentHash(text).as("h"))
-    exactEdges(hashed, hashed)
-      .unionByName(repNearPairs(docs, id, text, hashed, shingleK, threshold))
+    val content = docs.select(id.as("doc_id"), contentHash(text).as("h"))
+    exactEdges(content).unionByName(
+      minhashLsh(repDocs(docs, id, content), id, text, shingleK, threshold = threshold)
+        .select(col("doc_a"), col("doc_b")))
   }
 
   /** SOFT deduplication — keep every document but attach a training
@@ -499,6 +418,17 @@ object Dedup {
       .drop("__sd_id", "member_id")
   }
 
+  /** The canonical corpus dedup pass, composed end-to-end: exact duplicate
+    * pairs (same normalized content) ∪ MinHash-LSH near-dup pairs →
+    * connected components → keep only each cluster's minimum-id survivor.
+    * Returns the surviving rows of `docs`, unchanged schema — the "drop
+    * the duplicates" operation a training-data pipeline actually runs.
+    *
+    * Scale shape: one content-hash aggregate (exact pairs come from the
+    * hash groups, never a text self-join), the id-only LSH band shuffle,
+    * O(log diameter) component rounds, and one final semi-join of
+    * survivors back to the corpus.
+    */
   def dedupCorpus(
       docs: DataFrame, id: Column, text: Column,
       shingleK: Int = 3, threshold: Double = 0.5): DataFrame = {
@@ -584,25 +514,13 @@ object Dedup {
     require(bands > maxHamming, "pigeonhole recall needs bands > maxHamming")
     val sig = simhash(docs, id, text, bits)
     val bandLen = bits / bands
-    // id-only banding (see minhashLsh): candidates shuffle (doc_id, band,
-    // bucket); signatures join back for the Hamming check. Wider bands
-    // (bandLen bits → 2^bandLen buckets) keep bucket populations — and so
-    // the candidate join — small.
-    val banded = sig.select(col("doc_id"),
-      explode(array((0 until bands).map(b =>
-        struct(lit(b).as("band"),
-          substring(col("simhash"), b * bandLen + 1, bandLen).as("bucket"))): _*)).as("bb"))
-      .select(col("doc_id"), col("bb.band"), col("bb.bucket"))
-    val cand = banded.select(col("band"), col("bucket"), col("doc_id").as("doc_a"))
-      .join(banded.select(col("band"), col("bucket"), col("doc_id").as("doc_b")),
-        Seq("band", "bucket"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .dropDuplicates("doc_a", "doc_b")
-    cand
-      .join(sig.select(col("doc_id").as("doc_a"), col("simhash").as("sig_a")), Seq("doc_a"))
-      .join(sig.select(col("doc_id").as("doc_b"), col("simhash").as("sig_b")), Seq("doc_b"))
-      .withColumn("hamming", hamming(col("sig_a"), col("sig_b"), bits))
+    // id-only banding: candidates shuffle (doc_id, band, bucket);
+    // signatures join back for the Hamming check. Wider bands (bandLen
+    // bits → 2^bandLen buckets) keep bucket populations — and so the
+    // candidate join — small.
+    val banded = bandRows(sig, bands)(b => substring(col("simhash"), b * bandLen + 1, bandLen))
+    verifyJoin(bandPairs(banded, banded).dropDuplicates("doc_a", "doc_b"), sig, sig)
+      .withColumn("hamming", hamming(col("simhash_a"), col("simhash_b"), bits))
       .filter(col("hamming") <= maxHamming)
       .select("doc_a", "doc_b", "hamming")
   }
@@ -678,21 +596,12 @@ object Dedup {
         spark.read.parquet(s"$dir/meta"))
   }
 
-  /** Exact-dup star edges (keeper → member) for the given content table,
-    * restricted to hash groups present in `touch` (every group when
-    * touch == content). Keeper-JOIN shape, same viral-duplicate-safety as
-    * [[dedupCorpus]].
+  /** Exact-dup star edges (keeper → member) of a content table. Only
+    * groups with more than one member reach the join (the filter is pushed
+    * onto the aggregate), so a corpus without duplicates joins nothing.
     */
-  private def exactEdges(content: DataFrame, touch: DataFrame): DataFrame = {
-    val touched = content.join(touch.select("h").distinct(), Seq("h"), "left_semi")
-    val keepers = touched.groupBy(col("h"))
-      .agg(min(col("doc_id")).as("doc_a"), count(lit(1)).as("n"))
-      .filter(col("n") > 1)
-      .select("h", "doc_a")
-    touched.join(keepers, Seq("h"))
-      .filter(col("doc_id") =!= col("doc_a"))
-      .select(col("doc_a"), col("doc_id").as("doc_b"))
-  }
+  private def exactEdges(content: DataFrame): DataFrame =
+    starEdges(withRep(content).filter(col("n") > 1))
 
   /** Build the incremental index for an initial corpus — the same edges as
     * [[dedupCorpus]] (exact ∪ LSH-verified near-dup → connected components)
@@ -704,30 +613,17 @@ object Dedup {
       threshold: Double = 0.5): DedupIndex = {
     val content = docs.select(id.as("doc_id"), contentHash(text).as("h"))
     // the index's bands/shingles hold only distinct-content REPRESENTATIVES
-    // (min id per hash) — identical texts band identically, so banding a
-    // viral group is quadratic for nothing; exactEdges carries the members
-    // (same lossless argument as corpusEdges)
-    val repIds = content.groupBy(col("h")).agg(min(col("doc_id")).as("__rep_id"))
-      .select(col("__rep_id"))
-    val repDocs = docs.withColumn("__did", id)
-      .join(repIds, col("__did") === col("__rep_id"), "left_semi")
-      .drop("__did")
-    val sh = shingleTable(repDocs, id, text, shingleK)
+    // — star edges carry the members (the corpusEdges argument)
+    val sh = shingleTable(repDocs(docs, id, content), id, text, shingleK)
     val bands = bandTable(sh, numHashes, rowsPerBand)
-    val cand = bands.select(col("band"), col("bucket"), col("doc_id").as("doc_a"))
-      .join(bands.select(col("band"), col("bucket"), col("doc_id").as("doc_b")),
-        Seq("band", "bucket"))
-      .filter(col("doc_a") < col("doc_b"))
-      .select("doc_a", "doc_b")
-      .dropDuplicates("doc_a", "doc_b")
-    val nearPairs = verifyJaccard(cand, sh, threshold).select("doc_a", "doc_b")
+    val nearPairs = lshPairs(sh, bands, threshold).select("doc_a", "doc_b")
     // the assignment IS the index's materialized state: checkpoint it so a
     // following increment's three references (reach test, star edges,
     // untouched anti-join) read rows, not a live CC plan (save()/load()
     // gives the same property through parquet on a real pipeline)
     val assign = resolveClusters(
       docs.select(id.as("member_id")),
-      exactEdges(content, content).unionByName(nearPairs), "doc_a", "doc_b")
+      exactEdges(content).unionByName(nearPairs), "doc_a", "doc_b")
       .select("member_id", "keep_id")
       .localCheckpoint()
     val meta = docs.agg(max(id).as("max_doc_id")).localCheckpoint()
@@ -760,7 +656,8 @@ object Dedup {
     *  - exact edges recompute only for content groups the shard touches
     *    (semi-join on the shard's hashes);
     *  - near-dup candidates come from the SHARD's bands probing
-    *    (index ∪ shard) bands — old×old collisions are never re-examined;
+    *    (index ∪ shard) bands — old×old collisions are never re-examined,
+    *    and the monotone-id contract makes every old id the pair's doc_a;
     *  - the old clusters enter the component resolution as star edges, so
     *    a shard doc bridging two previously-separate clusters merges them
     *    exactly as the batch run would (min-id keeper over the union).
@@ -777,37 +674,26 @@ object Dedup {
     val newContent = newDocs.select(id.as("doc_id"), contentHash(text).as("h"))
     // band only the shard's distinct-content representatives, and only for
     // content the INDEX has not seen: a shard doc whose hash is indexed
-    // reaches its group through exactEdges, and that group's representative
-    // already bands — re-banding it would just re-accumulate signature rows
-    // shard after shard
-    val newRepIds = newContent
-      .join(index.content.select(col("h")), Seq("h"), "left_anti")
-      .groupBy(col("h")).agg(min(col("doc_id")).as("__rep_id"))
-      .select(col("__rep_id"))
-    val newRepDocs = newDocs.withColumn("__did", id)
-      .join(newRepIds, col("__did") === col("__rep_id"), "left_semi")
-      .drop("__did")
-    val newSh = shingleTable(newRepDocs, id, text, shingleK)
+    // reaches its group through the star edges, and that group's
+    // representative already bands — re-banding it would just re-accumulate
+    // signature rows shard after shard
+    val newSh = shingleTable(repDocs(newDocs, id,
+      newContent.join(index.content.select(col("h")), Seq("h"), "left_anti")), id, text, shingleK)
     val newBands = bandTable(newSh, numHashes, rowsPerBand)
     val allContent = index.content.unionByName(newContent)
     val allBands = index.bands.unionByName(newBands)
     val allSh = index.shingles.unionByName(newSh)
-    val exactPairs = exactEdges(allContent, newContent)
-    // shard probes the union: pairs always have ≥1 new-side doc
-    val cand = allBands.select(col("band"), col("bucket"), col("doc_id").as("a"))
-      .join(newBands.select(col("band"), col("bucket"), col("doc_id").as("b")),
-        Seq("band", "bucket"))
-      .filter(col("a") =!= col("b"))
-      .select(least(col("a"), col("b")).as("doc_a"),
-        greatest(col("a"), col("b")).as("doc_b"))
-      .dropDuplicates("doc_a", "doc_b")
+    val exactPairs = exactEdges(allContent.join(newContent.select(col("h")), Seq("h"), "left_semi"))
+    // shard probes the union: doc_b is always a shard doc, so its side of
+    // the verify joins back only the shard's shingles
+    val cand = bandPairs(allBands, newBands).dropDuplicates("doc_a", "doc_b")
     // materialize the edge set once: it is referenced by the endpoint
     // reach test, the star union and the final resolution — without this
     // the LSH verify subtree re-executes per reference. Edges are id
     // pairs, orders of magnitude smaller than the corpus; on a real
     // cluster prefer persist()/checkpoint() (same shape).
     val newEdges = exactPairs
-      .unionByName(verifyJaccard(cand, allSh, threshold).select("doc_a", "doc_b"))
+      .unionByName(verifyJaccard(cand, allSh, newSh, threshold).select("doc_a", "doc_b"))
       .localCheckpoint()
 
     // components re-resolve ONLY where the shard connects: an old cluster

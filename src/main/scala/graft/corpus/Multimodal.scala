@@ -724,30 +724,19 @@ object Multimodal {
     * exact up to bands−1 flipped bits; beyond that the banding is
     * best-effort — the standard trade, raise `bands` for a higher exact
     * floor), then filter candidates by exact hamming ≤ `maxHamming`.
-    * Only (id, band) rows shuffle. Same viral caveat as the other pair
-    * APIs: identical images share all bands. */
+    * Only (id, band, bucket) rows cross the band join and its dedup; the
+    * hashes join back by id for the hamming check. Same viral caveat as
+    * the other pair APIs: identical images share all bands. */
   def dhashPairs(
       hashes: DataFrame, id: Column, hash: Column,
       maxHamming: Int = 6, bands: Int = 4): DataFrame = {
     val width = 64 / bands
-    val posts = hashes.select(id.as("doc_id"), hash.as("__h"))
-      .where(length(col("__h")) === 64)
-      .select(col("doc_id"), col("__h"),
-        explode(array((0 until bands).map(b =>
-          concat(lit(b.toString), lit(":"),
-            substring(col("__h"), b * width + 1, width))): _*)).as("band"))
-    posts.as("a")
-      .join(posts.as("b"),
-        col("a.band") === col("b.band") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_a"), col("b.doc_id").as("doc_b"),
-        col("a.__h").as("__ha"), col("b.__h").as("__hb"))
-      .dropDuplicates("doc_a", "doc_b")
-      .select(col("doc_a"), col("doc_b"),
-        aggregate(
-          transform(sequence(lit(1), lit(64)),
-            k => when(substring(col("__ha"), k, lit(1)) =!=
-              substring(col("__hb"), k, lit(1)), 1).otherwise(0)),
-          lit(0), (acc, x) => acc + x).as("hamming"))
+    val h = hashes.select(id.as("doc_id"), hash.as("h"))
+      .where(length(col("h")) === 64)
+    val banded = Candidates.bandRows(h, bands)(b => substring(col("h"), b * width + 1, width))
+    Candidates.verifyJoin(
+      Candidates.bandPairs(banded, banded).dropDuplicates("doc_a", "doc_b"), h, h)
+      .select(col("doc_a"), col("doc_b"), Dedup.hamming(col("h_a"), col("h_b"), 64).as("hamming"))
       .where(col("hamming") <= maxHamming)
   }
 

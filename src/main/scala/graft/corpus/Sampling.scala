@@ -118,16 +118,18 @@ object Sampling {
       docs: DataFrame, id: Column, text: Column,
       bench: DataFrame, benchId: Column, benchText: Column,
       shingleK: Int = 8, minHits: Int = 1): DataFrame = {
-    def postings(df: DataFrame, i: Column, t: Column, as: String) =
-      df.select(i.as(as), Dedup.shingles(t, shingleK).as("sh"))
-        .select(col(as), explode(col("sh")).as("g"))
-        .select(col(as), md5(col("g")).as("gh"))
-    postings(docs, id, text, "doc_id")
-      .join(postings(bench, benchId, benchText, "bench_id"), Seq("gh"))
+    Candidates.postings(Candidates.shingleTable(docs, id, text, shingleK))
+      .join(benchPostings(bench, benchId, benchText, shingleK), Seq("gh"))
       .groupBy("doc_id", "bench_id")
       .agg(count(lit(1)).as("n_shared")) // shingles are distinct per side
       .filter(col("n_shared") >= minHits)
   }
+
+  /** Shingle-hash postings `(bench_id, gh)` of the eval side. */
+  private def benchPostings(
+      bench: DataFrame, benchId: Column, benchText: Column, shingleK: Int): DataFrame =
+    Candidates.postings(Candidates.shingleTable(bench, benchId, benchText, shingleK))
+      .withColumnRenamed("doc_id", "bench_id")
 
   /** Context-length chunking with overlap — split long documents into
     * word-window chunks of `chunkWords` words advancing by
@@ -187,14 +189,10 @@ object Sampling {
       corpus: DataFrame, id: Column, text: Column,
       bench: DataFrame, benchId: Column, benchText: Column,
       shingleK: Int = 8): DataFrame = {
-    def postings(df: DataFrame, i: Column, t: Column, as: String) =
-      df.select(i.as(as), Dedup.shingles(t, shingleK).as("sh"))
-        .select(col(as), explode(col("sh")).as("g"))
-        .select(col(as), md5(col("g")).as("gh"))
-    val benchPost = postings(bench, benchId, benchText, "bench_id")
+    val benchPost = benchPostings(bench, benchId, benchText, shingleK)
     val totals = benchPost.groupBy("bench_id")
       .agg(count(lit(1)).as("n_shingles")) // shingles are distinct per doc
-    val hits = postings(corpus, id, text, "doc_id").select("gh")
+    val hits = Candidates.postings(Candidates.shingleTable(corpus, id, text, shingleK)).select("gh")
       .join(broadcast(benchPost), Seq("gh"))
       .groupBy("bench_id")
       .agg(countDistinct(col("gh")).as("n_hit"))

@@ -103,10 +103,10 @@ object Similarity {
     transform(planes, p => dot(vec, p) >= 0)
   }
 
-  /** Embedding-cosine near-duplicate pairs via random-hyperplane LSH —
-    * the same id-only-shuffle shape as Dedup.minhashLsh: signature bits →
-    * bands → (id, band, bucket) explode → bucket join over ids only →
-    * exact-cosine verification joins vectors back for surviving candidates.
+  /** Embedding-cosine near-duplicate pairs via random-hyperplane LSH on the
+    * near-dup candidate core ([[Candidates]]): signature bits → bands →
+    * (id, band, bucket) explode → bucket join over ids only → exact-cosine
+    * verification joins vectors back for surviving candidates.
     * No crossJoin anywhere; every shuffle is bounded by bucket collisions.
     *
     * Recall: a pair at cosine c agrees per bit with p = 1 − arccos(c)/π;
@@ -124,28 +124,18 @@ object Similarity {
   def hyperplaneNearDupPairs(
       corpus: DataFrame, id: Column, vec: Column, threshold: Double,
       bits: Int = 128, rowsPerBand: Int = 4, dim: Int = 64): DataFrame = {
-    val numBands = bits / rowsPerBand
-    val base = corpus.select(id.as("vec_id"), vec.as("v"))
+    val base = corpus.select(id.as("doc_id"), vec.as("v"))
     // fail fast on a dim mismatch: zip_with would null every projection,
     // every bit would render "0", and the bucket join would silently
     // degrade to all-pairs
     val checked = when(size(col("v")) === dim, col("v"))
       .otherwise(raise_error(concat(lit(s"hyperplane LSH configured for dim=$dim, got "),
         size(col("v")).cast("string"))))
-    val sig = base.select(col("vec_id"),
+    val sig = base.select(col("doc_id"),
       transform(hyperplaneBits(checked, bits, dim), b => when(b, "1").otherwise("0")).as("bitstr"))
-    val bands = sig.select(col("vec_id"),
-      explode(array((0 until numBands).map { b =>
-        struct(lit(b).as("band"),
-          // md5 over the band slice → fixed-width bucket key
-          md5(array_join(slice(col("bitstr"), b * rowsPerBand + 1, rowsPerBand), "")).as("bucket"))
-      }: _*)).as("bb"))
-      .select(col("vec_id"), col("bb.band"), col("bb.bucket"))
-    val cand = bands.select(col("band"), col("bucket"), col("vec_id").as("vec_a"))
-      .join(bands.select(col("band"), col("bucket"), col("vec_id").as("vec_b")),
-        Seq("band", "bucket"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select("vec_a", "vec_b")
+    // md5 over the band slice → fixed-width bucket key
+    val bands = Candidates.bandRows(sig, bits / rowsPerBand)(b =>
+      md5(array_join(slice(col("bitstr"), b * rowsPerBand + 1, rowsPerBand), "")))
     // Verify FIRST, dedupe the (few) survivors after: a pair colliding in
     // k bands is verified k times (k ≤ numBands, and the codegen'd dot
     // makes each check ~free), which beats shuffling the full raw candidate
@@ -156,15 +146,11 @@ object Similarity {
     // one dot per pair — the same arithmetic as cosine() (identical doubles,
     // the norm is the same sqrt(dot(v,v)) either way)
     val withNorm = base.withColumn("nrm", norm(col("v")))
-    cand
-      .join(withNorm.select(col("vec_id").as("vec_a"), col("v").as("va"),
-        col("nrm").as("na")), Seq("vec_a"))
-      .join(withNorm.select(col("vec_id").as("vec_b"), col("v").as("vb"),
-        col("nrm").as("nb")), Seq("vec_b"))
-      .withColumn("cos", dot(col("va"), col("vb")) / (col("na") * col("nb")))
+    Candidates.verifyJoin(Candidates.bandPairs(bands, bands), withNorm, withNorm)
+      .withColumn("cos", dot(col("v_a"), col("v_b")) / (col("nrm_a") * col("nrm_b")))
       .filter(col("cos") >= threshold)
-      .dropDuplicates("vec_a", "vec_b")
-      .select("vec_a", "vec_b", "cos")
+      .dropDuplicates("doc_a", "doc_b")
+      .select(col("doc_a").as("vec_a"), col("doc_b").as("vec_b"), col("cos"))
   }
 
   /** Viral-duplicate-safe CLUSTERING edges for embedding near-dup — the
@@ -181,16 +167,14 @@ object Similarity {
   def embedNearDupEdges(
       corpus: DataFrame, id: Column, vec: Column, threshold: Double,
       bits: Int = 128, rowsPerBand: Int = 4, dim: Int = 64): DataFrame = {
-    val hashed = corpus.select(id.as("vec_id"), vec.as("v"))
-      .withColumn("__h", md5(array_join(transform(col("v"), x => x.cast("string")), ",")))
-    val reps = hashed.groupBy(col("__h")).agg(min(col("vec_id")).as("__rep"))
-    val withRep = hashed.join(reps, Seq("__h"))
-    val star = withRep.filter(col("vec_id") =!= col("__rep"))
-      .select(col("__rep").as("vec_a"), col("vec_id").as("vec_b"))
-    val repFrame = withRep.filter(col("vec_id") === col("__rep"))
-      .select(col("vec_id"), col("v"))
-    star.unionByName(
-      hyperplaneNearDupPairs(repFrame, col("vec_id"), col("v"), threshold,
+    val hashed = corpus.select(id.as("doc_id"), vec.as("v"))
+      .withColumn("h", md5(array_join(transform(col("v"), x => x.cast("string")), ",")))
+    // one representative aggregate serves the star edges and the rows to band
+    val withRep = Candidates.withRep(hashed)
+    val repFrame = withRep.filter(col("doc_id") === col("rep"))
+    Candidates.starEdges(withRep)
+      .select(col("doc_a").as("vec_a"), col("doc_b").as("vec_b"))
+      .unionByName(hyperplaneNearDupPairs(repFrame, col("doc_id"), col("v"), threshold,
         bits, rowsPerBand, dim).select(col("vec_a"), col("vec_b")))
   }
 

@@ -60,8 +60,11 @@ object Router {
     }
     val flags = (nonFallbackFlags ++ fallbackFlags).toMap
     // every flag in one projection (one analysis, not one per column);
-    // `routes` reads the flag columns from a second one, so the optimizer
-    // keeps the predicates (the `rlike` among them) out of `routes`
+    // `routes` reads the flag columns from a second one. That keeps the
+    // predicates (the `rlike` among them) out of `routes` only while the
+    // flags are read too, as in the writeSinks cache: where only `routes`
+    // survives column pruning (Pipeline.sinkCounts), the optimizer collapses
+    // the two projections and inlines every predicate into the lambda
     df.withColumns(ListMap(specs.map(s =>
         s"route_${s.name}" -> coalesce(flags(s.name), lit(false))): _*))
       .withColumn(

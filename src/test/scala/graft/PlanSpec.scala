@@ -4,6 +4,8 @@ import org.apache.spark.sql.catalyst.expressions.AttributeSet
 import org.apache.spark.sql.execution.{FilterExec, GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.types.ArrayType
 
 import graft.parsers.ParseGenerator
 
@@ -114,11 +116,24 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   }
 
   test("minhash LSH plan shuffles ids, not shingle arrays, into the band join") {
-    val p = planOf("q_dedup_minhash")
-    assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"))
-    // the candidate join must be a hash join on the band bucket
-    assert(p.contains("SortMergeJoin") || p.contains("ShuffledHashJoin") ||
-      p.contains("BroadcastHashJoin"), "expected an equi-join on band buckets")
+    // every banded family: the candidate join is keyed on the band, and
+    // each side carries band, bucket and ONE id column — no shingle array,
+    // signature, vector or hash payload crosses it
+    Seq("q_dedup_minhash", "q_dedup_simhash_pairs", "q_dedup_embed",
+        "q_multimodal_dhash_pairs").foreach { name =>
+      val p = physicalOf(name)
+      val bandJoins = collect(p) {
+        case j: BaseJoinExec if j.leftKeys.flatMap(_.references).exists(_.name == "band") => j
+      }
+      assert(bandJoins.nonEmpty, s"$name: expected an equi-join on the band:\n$p")
+      for (j <- bandJoins; side <- j.children) {
+        val ids = side.output.filterNot(a => a.name == "band" || a.name == "bucket")
+        assert(side.output.map(_.name).toSet.contains("bucket") && ids.length == 1 &&
+          !ids.head.dataType.isInstanceOf[ArrayType],
+          s"$name: band join input should be (band, bucket, id), got " +
+            s"${side.output.map(a => s"${a.name}:${a.dataType.simpleString}").mkString(", ")}:\n$p")
+      }
+    }
   }
 
   test("post-parse filter/projection stays inside whole-stage codegen") {
