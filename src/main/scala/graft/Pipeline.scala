@@ -1,13 +1,11 @@
 package graft
 
-import java.util.concurrent.{ExecutionException, Executors}
+import java.io.IOException
 
-import scala.util.{Failure, Try}
-
-import org.apache.spark.sql.{Column, DataFrame, Observation, SparkSession}
+import org.apache.hadoop.fs.Path
+import org.apache.spark.sql.{Column, DataFrame, Observation, Row, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.storage.StorageLevel
+import org.apache.spark.sql.types.StructType
 
 import graft.enrich.ContextualData
 import graft.observe.Stats
@@ -21,12 +19,12 @@ import graft.transcripts.Transcripts
   * Physical shape (SURVEY.md §2.7): ONE projection computes parse results,
   * enrichment and all route flags — narrow transformations fused by
   * whole-stage codegen with the single parse `Generate`. Fan-out to sinks
-  * persists that projection once (the parse runs once, the analog of the
-  * reference's COW-clone fan-out) and plans every sink as a filter over
-  * the cache entry, not over the lineage below it. The catch-all sink is
-  * written first and fills the cache; the other sinks and the aggregate
-  * are then written concurrently, as syslog-ng runs each destination on
-  * its own worker thread, and all are joined before the cache is released.
+  * is one job, as the reference multiplexer hands each message to every
+  * matching destination in one pass (lib/logmpx.c:79-124): each row is
+  * exploded into one copy per delivering sink and the copies are written
+  * once, partitioned by sink, so the parse runs once with no cache. The
+  * aggregate reads the written sink rows back; each sink's partition
+  * directory then becomes its `sink_<name>` output.
   */
 object Pipeline {
 
@@ -78,59 +76,57 @@ object Pipeline {
 
   /** Batch-resumable multi-sink write: rerunning after a mid-job failure
     * skips sinks that already committed (their `_SUCCESS` marker is the
-    * commit record — Spark's FileOutputCommitter writes it only after all
-    * tasks commit, so a half-written sink is retried, a committed one is
-    * not). This is the batch face of the checkpoint-resume requirement;
-    * the streaming face is StreamingPipeline.writeSinks' checkpoint WAL.
-    * Writes the pending sinks as [[writeSinks]] does (cached leaf, first
-    * write alone, the rest concurrently). Returns the set of sinks
-    * actually (re)computed this run.
+    * commit record, added only once the sink's directory is in place, so a
+    * half-written sink is retried, a committed one is not). This is the
+    * batch face of the checkpoint-resume requirement; the streaming face is
+    * StreamingPipeline.writeSinks' checkpoint WAL. Writes the pending sinks
+    * as [[writeSinks]] does and returns them.
     */
   def writeSinksResumable(spark: SparkSession, sfDir: String, outDir: String): Set[String] = {
     val pending = sinkNames.filterNot(s =>
       new java.io.File(s"$outDir/sink_$s/_SUCCESS").exists())
     if (pending.isEmpty) return Set.empty
-    val f = persistForFanOut(flagged(spark, sfDir))
-    try {
-      val leaf = Bridge.cachedLeaf(f)
-      fanOut(pending.map(s => sinkWrite(Router.sink(leaf, s), outDir, s))).foreach(_.get)
-      pending.toSet
-    } finally { f.unpersist(); () }
+    writeFanOut(fanOutRows(flagged(spark, sfDir), pending), outDir, pending)(_ => ())
+    pending.toSet
   }
 
   private val sinkNames = Seq("all", "tool_calls", "errors", "fallback")
   private val sinkColumns = Seq("conv_id", "turn_idx", "role", "text", "tool", "ts", "rule_id")
 
-  /** Persists what the fan-out reads of a flagged frame: the sink columns
-    * plus lineage, the route flags, and `routes` for the aggregate. The
-    * parse's `fields` map and the enrichment columns stay out of the cache
-    * (at 150k events: 22 MB cached instead of 58 MB).
+  /** One row per (flagged row, sink of `sinks` it is delivered to): the sink
+    * columns, lineage and the sink's name in `sink`. The flags feed a plain
+    * `explode` of `when`s (no array lambda), so `routes` is never read.
     */
-  private def persistForFanOut(flagged: DataFrame): DataFrame =
-    flagged.select((sinkColumns.map(col) :+ lineageStruct.as("lineage")) ++
-      (sinkNames.map(s => s"route_$s") :+ "routes").map(col): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+  private def fanOutRows(flagged: DataFrame, sinks: Seq[String]): DataFrame =
+    flagged.select((sinkColumns.map(col) :+ lineageStruct.as("lineage")) :+
+        explode(array(sinks.map(s => when(col(s"route_$s"), lit(s))): _*)).as("sink"): _*)
+      .where(col("sink").isNotNull)
 
-  /** A sink's write, its frame built (and analyzed) on the calling thread. */
-  private def sinkWrite(rows: DataFrame, outDir: String, sink: String): () => Unit = {
-    val out = rows.select((sinkColumns :+ "lineage").map(col): _*)
-    () => out.write.mode("overwrite").parquet(s"$outDir/sink_$sink")
-  }
-
-  /** Runs the first write alone (over a persisted frame it fills the
-    * cache), then the rest concurrently from a pool of their own. Returns
-    * the outcome of every write it started, each joined; a failed first
-    * write starts no other.
+  /** Writes [[fanOutRows]] once, partitioned by `sink`, into
+    * `$outDir/_sinks`, runs `staged` on that directory (the aggregate reads
+    * it back there), then moves each `sink=<s>` directory to
+    * `$outDir/sink_<s>` and marks it with `_SUCCESS`. A sink no row reached
+    * gets a zero-row file with the sink schema. If the write fails, no
+    * `sink_<s>` directory has been touched.
     */
-  private def fanOut(writes: Seq[() => Unit]): Seq[Try[Unit]] = {
-    val first = Try(writes.head())
-    if (first.isFailure || writes.size == 1) return Seq(first)
-    val pool = Executors.newFixedThreadPool(writes.size - 1)
-    try {
-      val running = writes.tail.map(w => pool.submit[Unit](() => w()))
-      first +: running.map(r =>
-        Try(r.get()).recoverWith { case e: ExecutionException => Failure(e.getCause) })
-    } finally { pool.shutdown() }
+  private def writeFanOut(rows: DataFrame, outDir: String, sinks: Seq[String])(
+      staged: String => Unit): Unit = {
+    val spark = rows.sparkSession
+    val stage = s"$outDir/_sinks"
+    rows.write.mode("overwrite").partitionBy("sink").parquet(stage)
+    staged(stage)
+    val fs = new Path(outDir).getFileSystem(spark.sparkContext.hadoopConfiguration)
+    for (s <- sinks) {
+      val (src, dst) = (new Path(stage, s"sink=$s"), new Path(outDir, s"sink_$s"))
+      fs.delete(dst, true) // rename moves into an existing directory
+      if (!fs.exists(src))
+        spark.createDataFrame(java.util.List.of[Row](), rows.drop("sink").schema)
+          .write.parquet(dst.toString)
+      else if (fs.rename(src, dst)) fs.create(new Path(dst, "_SUCCESS")).close()
+      else throw new IOException(s"cannot move $src to $dst")
+    }
+    fs.delete(new Path(stage), true)
+    ()
   }
 
   /** Lineage struct (north rule): reader partition + a row id derived from
@@ -153,48 +149,49 @@ object Pipeline {
     df.repartition(keys.map(col): _*)
       .write.mode("overwrite").partitionBy(keys: _*).parquet(outDir)
 
-  /** Multi-sink write: one persisted pass, N filtered writes + the aggregate
-    * and a stats table — the production shape of the job. Every sink row
-    * carries a per-partition lineage struct (north rule) and every write
-    * feeds per-stage counters into the stats table via `observe` (no extra
-    * scans — reference lib/stats counters). The sinks and the aggregate are
-    * planned over the cache entry; `sink_all` is written first and fills the
-    * cache, the other three sinks and the aggregate concurrently. The stats
-    * snapshot is taken once the listener bus has delivered every write's
-    * counters to the collector, so it always holds the same rows (if the
-    * bus is still busy after 60 s, the snapshot holds what has arrived and
-    * a warning is printed). A failed write is rethrown after every started
-    * write has finished and the cache is released.
+  /** Multi-sink write: every sink + the aggregate and a stats table — the
+    * production shape of the job. Every sink row carries a per-partition
+    * lineage struct (north rule) and the sink write feeds per-stage
+    * counters into the stats table via `observe` (no extra scans —
+    * reference lib/stats counters). The stats snapshot is taken once the
+    * listener bus has delivered those counters, so it always holds the
+    * same rows (if the bus is still busy after 60 s, it holds what has
+    * arrived and a warning is printed). A failed write is rethrown and
+    * leaves every `sink_<s>` directory as it was.
     */
   def writeSinks(spark: SparkSession, sfDir: String, outDir: String): Map[String, Long] = {
     val stats = Stats.install(spark)
-    val f = persistForFanOut(Stats.observed(flagged(spark, sfDir), "flagged",
-      "parse_errors" -> sum(when(col("rule_id").isNull, 1L).otherwise(0L)),
-      "matched" -> sum(when(size(col("routes")) > lit(1), 1L).otherwise(0L))))
     try {
-      val leaf = Bridge.cachedLeaf(f)
-      // counts ride the writes themselves via Observation.get (blocks until
-      // the action's metrics arrive) — no post-write re-read scans
-      val observations = sinkNames.map(s => s -> Observation(s"sink_count_$s"))
-      val writes = observations.map { case (s, obs) =>
-        sinkWrite(Stats.observed(Router.sink(leaf, s), s"sink_$s")
-          .observe(obs, count(lit(1)).as("n")), outDir, s)
+      // route_all is always true: a row is matched if another sink takes it
+      val matched = sinkNames.filterNot(_ == "all").map(s => col(s"route_$s")).reduce(_ || _)
+      val f = Stats.observed(flagged(spark, sfDir), "flagged",
+        "parse_errors" -> sum(when(col("rule_id").isNull, 1L).otherwise(0L)),
+        "matched" -> sum(when(matched, 1L).otherwise(0L)))
+      // counts ride the write itself via Observation.get (blocks until the
+      // action's metrics arrive) — no post-write re-read scans. Each sink's
+      // rows are counted from its flag before the explode, over fewer rows
+      val observations = sinkNames.map(s => s -> Observation(s"graft.sink_$s"))
+      val rows = fanOutRows(observations.foldLeft(f) { case (df, (s, obs)) =>
+        df.observe(obs, count_if(col(s"route_$s")).as("processed"))
+      }, sinkNames)
+      val aggColumns = StructType(Seq("role", "tool", "ts", "sink").map(rows.schema(_)))
+      writeFanOut(rows, outDir, sinkNames) { stage =>
+        spark.read.schema(aggColumns).parquet(stage)
+          .groupBy(col("sink"), col("role"), coalesce(col("tool"), lit("none")).as("tool"),
+            date_trunc("hour", col("ts")).as("bucket"))
+          .agg(count(lit(1)).as("n"))
+          .write.mode("overwrite").parquet(s"$outDir/agg_counts")
       }
-      val agg = sinkCounts(leaf)
-      val outcomes = fanOut(writes :+ (() => agg.write.mode("overwrite").parquet(s"$outDir/agg_counts")))
-      // wait even when a write failed: an event arriving after this call
-      // returned would land in the next call's collector
-      val reported = Stats.awaitReports(spark)
-      outcomes.foreach(_.get)
-      if (!reported) System.err.println(
+      if (!Stats.awaitReports(spark)) System.err.println(
         "[graft] writeSinks: listener bus still busy after the sink writes; " +
           "the stats snapshot may miss counters")
-      stats.snapshot(spark).write.mode("overwrite").parquet(s"$outDir/stats")
-      observations.map { case (s, obs) => s -> obs.get("n").asInstanceOf[Long] }.toMap
+      stats.snapshot(spark).coalesce(1).write.mode("overwrite").parquet(s"$outDir/stats")
+      observations.map { case (s, obs) => s -> obs.get("processed").asInstanceOf[Long] }.toMap
     } finally {
-      f.unpersist()
-      // collectors are per-call: leaving them registered would accumulate
-      // listeners (and buffers) across writeSinks calls on a long session
+      // wait even when a write failed: a late event would land in the next
+      // call's collector. Collectors are per-call: leaving them registered
+      // would accumulate listeners across writeSinks calls on a long session
+      Stats.awaitReports(spark)
       spark.listenerManager.unregister(stats)
       ()
     }

@@ -477,11 +477,15 @@ object Dedup {
           when(col(s"v$i") >= 0, lit("1")).otherwise(lit("0"))): _*).as("simhash"))
   }
 
-  /** Hamming distance between two equal-length bit strings. */
-  def hamming(a: Column, b: Column, bits: Int): Column =
-    (0 until bits)
-      .map(i => when(substring(a, i + 1, 1) =!= substring(b, i + 1, 1), 1).otherwise(0))
+  /** Hamming distance between two equal-length bit strings: the popcount
+    * of the XOR of each 32-bit chunk, read as a number with `conv`. */
+  def hamming(a: Column, b: Column, bits: Int): Column = {
+    def chunk(s: Column, pos: Int): Column =
+      conv(substring(s, pos + 1, math.min(32, bits - pos)), 2, 10).cast("bigint")
+    (0 until bits by 32)
+      .map(pos => bit_count(chunk(a, pos) bitwiseXOR chunk(b, pos)))
       .reduce((x, y) => x + y)
+  }
 
   /** SimHash near-dup pairs: band the signature into `bands` substrings;
     * docs sharing any band substring are candidates; keep pairs with

@@ -32,8 +32,9 @@ object Stats {
   /** Collects observed metrics from every completed action on the session.
     * Rows carry a wall-clock stamp so the periodic aggregators (average /
     * maximum / change-per-second) can run over successive snapshots — ops
-    * metrics, never oracle-checked data. A failed action adds one
-    * `(action, failed, 1, <function>)` row.
+    * metrics, never oracle-checked data. A failed action adds an
+    * `(action, failed, 1, <function>)` row and an
+    * `(action, failed.<exception class>, 1, <function>)` row.
     */
   final class Collector extends QueryExecutionListener {
     private val buf = mutable.ArrayBuffer.empty[(String, String, Long, String, Long)]
@@ -57,8 +58,11 @@ object Stats {
       if (rows.nonEmpty) record(rows)
     }
 
-    override def onFailure(funcName: String, qe: QueryExecution, ex: Exception): Unit =
-      record(Seq(("action", "failed", 1L, funcName, System.currentTimeMillis())))
+    override def onFailure(funcName: String, qe: QueryExecution, ex: Exception): Unit = {
+      val now = System.currentTimeMillis()
+      record(Seq("failed", s"failed.${ex.getClass.getSimpleName}")
+        .map(("action", _, 1L, funcName, now)))
+    }
 
     def snapshot(spark: SparkSession): DataFrame = {
       val rows = buf.synchronized(buf.toSeq)

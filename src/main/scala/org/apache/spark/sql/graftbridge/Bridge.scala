@@ -44,15 +44,6 @@ object Bridge {
     Dataset.ofRows(qe.sparkSession, InlineCTE(alwaysInline = true)(qe.analyzed))
   }
 
-  /** A frame whose plan is `df`'s cache entry (`df` must be persisted):
-    * frames built over it analyze and plan one `InMemoryRelation` leaf
-    * instead of the whole lineage below the cache.
-    */
-  def cachedLeaf(df: DataFrame): DataFrame = {
-    val qe = df.queryExecution
-    Dataset.ofRows(qe.sparkSession, qe.withCachedData)
-  }
-
   /** Waits until the session's listener bus has delivered every event
     * posted so far (Spark posts an action's completion event before the
     * action returns, and delivers it later on a bus thread). False if the

@@ -3,7 +3,16 @@ package graft
 import java.io.File
 import java.nio.file.{Files, Paths}
 
+import scala.collection.mutable
+import scala.jdk.StreamConverters._
+
+import org.apache.spark.sql.catalyst.expressions.LambdaFunction
+import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.datasources.InsertIntoHadoopFsRelationCommand
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.concurrent.Eventually._
 import org.scalatest.time.SpanSugar._
 
@@ -11,8 +20,10 @@ import org.scalatest.time.SpanSugar._
   * and per-partition lineage on sink rows (reference lib/stats + north
   * rule's lineage requirement).
   */
-class StatsSpec extends SparkSpec {
+class StatsSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   import spark.implicits._
+
+  private val sinkNames = Seq("all", "tool_calls", "errors", "fallback")
 
   test("writeSinks emits a stats table and lineage columns") {
     val out = Files.createTempDirectory("graft-stats").toString
@@ -27,13 +38,17 @@ class StatsSpec extends SparkSpec {
     assert(processed.nonEmpty && processed.forall(_._3 == counts("all")))
     val parseErr = stats.filter(s => s._1 == "flagged" && s._2 == "parse_errors")
     assert(parseErr.nonEmpty && parseErr.forall(_._3 > 0)) // corrupt lines exist
-    // per-sink stages observed with their own counts
-    assert(stats.exists(s => s._1 == "sink_errors" && s._2 == "processed"))
-    // 19 rows, always: each of the 4 sink writes reports the 3 flagged
-    // counters (read through the cache) and its own `processed`; the
-    // aggregate write reports the 3 flagged counters. The snapshot waits
-    // until the listener bus has delivered all five, so none is missing.
-    assert(stats.length === 19)
+    // per-sink stages observed with their own counts, equal to the returned
+    // counts and to the rows each sink directory holds
+    for (s <- sinkNames) {
+      val rows = spark.read.parquet(s"$out/sink_$s").count()
+      assert(counts(s) === rows, s)
+      assert(stats.contains((s"sink_$s", "processed", rows)), s)
+    }
+    // 7 rows, always: the one fan-out write reports the 3 flagged counters
+    // and each sink's `processed`. The snapshot waits until the listener bus
+    // has delivered them, so none is missing.
+    assert(stats.length === 7)
 
     val allRows = spark.read.parquet(s"$out/sink_all")
     assert(allRows.columns.contains("lineage"))
@@ -55,40 +70,93 @@ class StatsSpec extends SparkSpec {
       spark.read.parquet(s"$out/stats").select("stage", "counter", "value")
         .as[(String, String, Long)].collect().toSeq.sorted
     }
-    assert(runs.head.size === 19)
+    assert(runs.head.size === 7)
     runs.zipWithIndex.foreach { case (r, i) => assert(r === runs.head, s"call ${i + 1}") }
   }
 
-  test("a failed sink write: started writes joined, cache released, failure recorded") {
+  test("writeSinks is three file writes, none over a cache or an array lambda") {
+    val out = Files.createTempDirectory("graft-sink-plans").toString
+    val writes = mutable.ArrayBuffer.empty[(InsertIntoHadoopFsRelationCommand, SparkPlan)]
+    val listener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit =
+        qe.analyzed.collectFirst { case c: InsertIntoHadoopFsRelationCommand => c }
+          .foreach(c => writes.synchronized { writes += (c -> qe.executedPlan); () })
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    // a frame another spec cached would be substituted into the plans
     spark.catalog.clearCache()
+    // events of earlier actions must not reach this listener
+    assert(graft.observe.Stats.awaitReports(spark))
+    spark.listenerManager.register(listener)
+    try {
+      Pipeline.writeSinks(spark, sfUnit, out)
+      assert(graft.observe.Stats.awaitReports(spark))
+    } finally spark.listenerManager.unregister(listener)
+
+    val byDir = writes.map { case (c, p) => c.outputPath.getName -> (c, p) }.toMap
+    assert(writes.size === 3 && byDir.keySet === Set("_sinks", "agg_counts", "stats"))
+    assert(byDir("_sinks")._1.partitionColumns.map(_.name) === Seq("sink"))
+    for ((dir, (_, plan)) <- byDir) {
+      assert(find(plan)(_.isInstanceOf[InMemoryTableScanExec]).isEmpty, dir)
+      assert(find(plan)(_.expressions.exists(_.exists(_.isInstanceOf[LambdaFunction]))).isEmpty,
+        dir)
+    }
+  }
+
+  test("a sink no row reaches gets a readable zero-row directory with the sink schema") {
+    // one event per user: every turn is a `user` turn, so no row has a tool
+    val sf = Files.createTempDirectory("graft-sf-no-tools").toString
+    spark.read.parquet(s"$sfUnit/events.parquet").limit(200)
+      .select(col("event_id"), col("ts"), col("event_id").as("user_id"))
+      .write.parquet(s"$sf/events.parquet")
+    val out = Files.createTempDirectory("graft-empty-sink").toString
+    assert(Pipeline.writeSinks(spark, sfUnit, out)("tool_calls") > 0)
+    // the earlier, non-empty sink_tool_calls is replaced
+    val counts = Pipeline.writeSinks(spark, sf, out)
+    assert(counts("tool_calls") === 0L && counts("all") === 200L)
+    val empty = spark.read.parquet(s"$out/sink_tool_calls")
+    assert(empty.count() === 0L)
+    assert(empty.schema === spark.read.parquet(s"$out/sink_all").schema)
+    assert(new File(s"$out/sink_tool_calls/_SUCCESS").exists())
+  }
+
+  test("a failed fan-out write: committed sinks untouched, no stats, failure class recorded") {
     val out = Files.createTempDirectory("graft-sink-fail").toString
-    // sink_errors resolves to a path below a regular file: its write fails
+    assert(Pipeline.writeSinksResumable(spark, sfUnit, out) === sinkNames.toSet)
+    // a lost commit marker leaves sink_errors pending
+    assert(new File(s"$out/sink_errors/_SUCCESS").delete())
+    def sinkFiles(): Map[String, Seq[Byte]] =
+      sinkNames.flatMap { s =>
+        Files.walk(Paths.get(out, s"sink_$s")).toScala(Seq).filter(Files.isRegularFile(_))
+          .map(p => p.toString -> Files.readAllBytes(p).toSeq)
+      }.toMap
+    val before = sinkFiles()
+    // _sinks resolves to a path below a regular file: the fan-out write fails
     val blocker = new File(out, "blocker")
     assert(blocker.createNewFile())
-    Files.createSymbolicLink(Paths.get(out, "sink_errors"), Paths.get(blocker.getPath, "dir"))
+    Files.createSymbolicLink(Paths.get(out, "_sinks"), Paths.get(blocker.getPath, "dir"))
     val collector = graft.observe.Stats.install(spark)
     try {
       intercept[Exception](Pipeline.writeSinks(spark, sfUnit, out))
-      // every other write had committed before writeSinks threw
-      for (d <- Seq("sink_all", "sink_tool_calls", "sink_fallback", "agg_counts"))
-        assert(new File(s"$out/$d/_SUCCESS").exists(), d)
-      assert(!new File(s"$out/stats").exists())
-      assert(spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
-        .sharedState.cacheManager.isEmpty, "the flagged frame is unpersisted")
+      assert(sinkFiles() === before)
+      assert(!new File(s"$out/agg_counts").exists() && !new File(s"$out/stats").exists())
       // job-end events reach the status tracker through the listener bus
       eventually(timeout(30.seconds)) {
         assert(spark.sparkContext.statusTracker.getActiveJobIds.isEmpty)
       }
-      // four writes reported counters, one failed
       assert(graft.observe.Stats.awaitReports(spark))
       val failed = collector.snapshot(spark).filter(col("stage") === "action")
         .as[(String, String, Long, String)].collect()
-      assert(failed.length === 1)
-      assert(failed.head._2 === "failed" && failed.head._3 === 1L && failed.head._4.nonEmpty)
+      assert(failed.length === 2 && failed.forall(r => r._3 == 1L && r._4.nonEmpty))
+      assert(failed.map(_._2).count(_ == "failed") === 1)
+      val cls = failed.map(_._2).filter(_.startsWith("failed."))
+      assert(cls.length === 1 && cls.head.length > "failed.".length, cls.mkString)
     } finally spark.listenerManager.unregister(collector)
 
-    Files.delete(Paths.get(out, "sink_errors"))
+    Files.delete(Paths.get(out, "_sinks"))
     assert(Pipeline.writeSinksResumable(spark, sfUnit, out) === Set("errors"))
+    assert(new File(s"$out/sink_errors/_SUCCESS").exists())
+    assert(spark.read.parquet(s"$out/sink_errors").count() > 0)
   }
 
   test("stats exposition: CSV + Prometheus golden strings; glob query") {
