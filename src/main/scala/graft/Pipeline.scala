@@ -63,12 +63,23 @@ object Pipeline {
 
   /** Per-sink hash aggregate: routed-row counts by role/tool/hour bucket. */
   def sinkCounts(flagged: DataFrame): DataFrame =
-    flagged
-      .select(explode(col("routes")).as("sink"), col("role"),
-        coalesce(col("tool"), lit("none")).as("tool"),
-        date_trunc("hour", col("ts")).as("bucket"))
+    fanOut(flagged, Seq(col("role"), coalesce(col("tool"), lit("none")).as("tool"),
+        date_trunc("hour", col("ts")).as("bucket")))
       .groupBy("sink", "role", "tool", "bucket")
       .agg(count(lit(1)).as("n"))
+
+  /** The sink fan-out (the reference multiplexer, lib/logmpx.c:79-124): one
+    * row per (flagged row, sink of `sinks` it is delivered to) holding
+    * `columns` and the sink's name in `sink`. The route flags feed a plain
+    * `explode` of `when`s, not the `routes` array lambda: lambdas evaluate
+    * interpreted, and where only `routes` survives column pruning every
+    * route predicate is inlined into the lambda's input. This way the
+    * predicates stay in the codegen'd flag projection.
+    */
+  def fanOut(flagged: DataFrame, columns: Seq[Column], sinks: Seq[String] = sinkNames): DataFrame =
+    flagged.select(columns :+
+        explode(array(sinks.map(s => when(col(s"route_$s"), lit(s))): _*)).as("sink"): _*)
+      .where(col("sink").isNotNull)
 
   /** Full job: returns the per-sink aggregate (driver smoke target). */
   def run(spark: SparkSession, sfDir: String): DataFrame =
@@ -93,14 +104,9 @@ object Pipeline {
   private val sinkNames = Seq("all", "tool_calls", "errors", "fallback")
   private val sinkColumns = Seq("conv_id", "turn_idx", "role", "text", "tool", "ts", "rule_id")
 
-  /** One row per (flagged row, sink of `sinks` it is delivered to): the sink
-    * columns, lineage and the sink's name in `sink`. The flags feed a plain
-    * `explode` of `when`s (no array lambda), so `routes` is never read.
-    */
+  /** [[fanOut]] of the sink columns and lineage. */
   private def fanOutRows(flagged: DataFrame, sinks: Seq[String]): DataFrame =
-    flagged.select((sinkColumns.map(col) :+ lineageStruct.as("lineage")) :+
-        explode(array(sinks.map(s => when(col(s"route_$s"), lit(s))): _*)).as("sink"): _*)
-      .where(col("sink").isNotNull)
+    fanOut(flagged, sinkColumns.map(col) :+ lineageStruct.as("lineage"), sinks)
 
   /** Writes [[fanOutRows]] once, partitioned by `sink`, into
     * `$outDir/_sinks`, runs `staged` on that directory (the aggregate reads

@@ -600,8 +600,7 @@ object SparkEntry {
 
     // ================= §2.7 routing =================
     "q_route" -> ((s, dir) => {
-      Pipeline.flagged(s, dir)
-        .select(col("conv_id"), col("turn_idx"), explode(col("routes")).as("sink"))
+      Pipeline.fanOut(Pipeline.flagged(s, dir), Seq(col("conv_id"), col("turn_idx")))
     }),
 
     "q_sink_counts" -> ((s, dir) => Pipeline.run(s, dir)),

@@ -29,8 +29,9 @@ final case class RouteSpec(
 
 /** Routing = syslog-ng's dataflow algebra on one projection: compute every
   * per-sink route flag in a single pass (the reference's multiplexer clones
-  * messages copy-on-write; our fan-out is N filters over one cached plan —
-  * SURVEY.md §2.7). Filter non-match is a routing signal, not row deletion.
+  * messages copy-on-write; our fan-out explodes each row into one copy per
+  * delivering sink from these flags, `Pipeline.fanOut` — SURVEY.md §2.7).
+  * Filter non-match is a routing signal, not row deletion.
   */
 object Router {
 
@@ -62,9 +63,11 @@ object Router {
     // every flag in one projection (one analysis, not one per column);
     // `routes` reads the flag columns from a second one. That keeps the
     // predicates (the `rlike` among them) out of `routes` only while the
-    // flags are read too, as in the writeSinks cache: where only `routes`
-    // survives column pruning (Pipeline.sinkCounts), the optimizer collapses
-    // the two projections and inlines every predicate into the lambda
+    // flags are read too: where only `routes` survives column pruning, the
+    // optimizer collapses the two projections and inlines every predicate
+    // into the lambda, which evaluates interpreted. Fan-outs therefore read
+    // the flags (Pipeline.fanOut); `routes` is kept for callers that want
+    // the sink list as one value
     df.withColumns(ListMap(specs.map(s =>
         s"route_${s.name}" -> coalesce(flags(s.name), lit(false))): _*))
       .withColumn(
@@ -74,9 +77,10 @@ object Router {
           x => x.isNotNull))
   }
 
-  /** Per-sink view (the multiplexer fan-out): call after `withRouteFlags`;
-    * persist the flagged frame first when writing several sinks so the parse
-    * stage runs once (the reference's single-parse guarantee via COW clones).
+  /** Per-sink view: call after `withRouteFlags`. Each such view re-runs the
+    * parse; to write several sinks from one parse (the reference's
+    * single-parse guarantee via COW clones), explode the rows over the flags
+    * and write them once, partitioned by sink (`Pipeline.writeSinks`).
     */
   def sink(flagged: DataFrame, name: String): DataFrame =
     flagged.filter(col(s"route_$name"))

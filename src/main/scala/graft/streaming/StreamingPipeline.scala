@@ -69,10 +69,8 @@ object StreamingPipeline {
     * the aggregate (the reference's timer-wheel would have expired them).
     */
   def sinkCounts(flagged: DataFrame, watermark: String = "1 hour"): DataFrame =
-    flagged
-      .withWatermark("ts", watermark)
-      .select(col("ts"), explode(col("routes")).as("sink"), col("role"),
-        coalesce(col("tool"), lit("none")).as("tool"))
+    graft.Pipeline.fanOut(flagged.withWatermark("ts", watermark),
+        Seq(col("ts"), col("role"), coalesce(col("tool"), lit("none")).as("tool")))
       .groupBy(col("sink"), col("role"), col("tool"), window(col("ts"), "1 hour"))
       .agg(count(lit(1)).as("n"))
 

@@ -100,5 +100,11 @@ class PipelineSpec extends SparkSpec {
     val agg = spark.read.parquet(s"$out/agg_counts")
     assert(agg.agg(sum("n")).as[Long].head() ==
       counts.values.sum)
+    // the aggregate read back from the sink rows equals the one counted
+    // from the route flags, row for row
+    val fromFlags = Pipeline.sinkCounts(flagged)
+    assert(agg.columns.toSeq === fromFlags.columns.toSeq)
+    assert(agg.collect().sortBy(_.toString).toSeq ===
+      fromFlags.collect().sortBy(_.toString).toSeq)
   }
 }

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.catalyst.expressions.AttributeSet
+import org.apache.spark.sql.catalyst.expressions.{AttributeSet, LambdaFunction, RLike}
 import org.apache.spark.sql.execution.{FilterExec, GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -136,6 +136,42 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     }
   }
 
+  /** Each whole-stage codegen stage of `plan` as the operators it fuses
+    * (its subtree down to its InputAdapters). */
+  private def codegenStages(plan: SparkPlan): Seq[Seq[SparkPlan]] = {
+    def fused(n: SparkPlan): Seq[SparkPlan] = n +: (n match {
+      case _: InputAdapter => Nil
+      case other => other.children.flatMap(fused)
+    })
+    collect(plan) { case w: WholeStageCodegenExec => fused(w.child) }
+  }
+
+  test("sink fan-out reads the route flags: no lambda, route predicates under codegen") {
+    // an explode of `routes` (an array lambda) would pull every route
+    // predicate into the interpreted lambda; the fan-out must explode the
+    // flags so the predicates stay in a codegen'd projection. The flagged
+    // frame is cached by PipelineSpec and would hide the predicates
+    spark.sharedState.cacheManager.clearCache()
+    Seq("q_sink_counts", "q_route").foreach { name =>
+      val df = SparkEntry.queries(name)(spark, sfUnit)
+      df.collect()
+      val plan = df.queryExecution.executedPlan
+      val lambdas = collect(plan) {
+        case n if n.expressions.exists(_.exists(_.isInstanceOf[LambdaFunction])) => n
+      }
+      assert(lambdas.isEmpty, s"$name evaluates an array lambda:\n$plan")
+      // `fallback` negates the errors predicate, so RLike may appear more
+      // than once; every operator evaluating it must be codegen'd
+      val routing = collect(plan) {
+        case n if n.expressions.exists(_.exists(_.isInstanceOf[RLike])) => n
+      }
+      assert(routing.nonEmpty, s"$name: no operator evaluates the route predicates:\n$plan")
+      val fused = codegenStages(plan).flatten
+      routing.foreach(n => assert(fused.exists(_ eq n),
+        s"$name: ${n.nodeName} evaluates route predicates outside whole-stage codegen:\n$plan"))
+    }
+  }
+
   test("post-parse filter/projection stays inside whole-stage codegen") {
     // the parse Generate, the rule_id filter and the projection above it
     // must fuse into one codegen stage. The plan is adaptive (the
@@ -146,13 +182,9 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val plan = df.queryExecution.executedPlan
     val p = plan.toString()
     assert(p.contains("*("), s"parse pipeline should codegen:\n$p")
-    // one codegen stage's fused subtree (down to its InputAdapter) holds
-    // both the rule_id filter and the parse
-    def fused(n: SparkPlan): Seq[SparkPlan] = n +: (n match {
-      case _: InputAdapter => Nil
-      case other => other.children.flatMap(fused)
-    })
-    val stage = collect(plan) { case w: WholeStageCodegenExec => fused(w.child) }.find { ns =>
+    // one codegen stage's fused subtree holds both the rule_id filter and
+    // the parse
+    val stage = codegenStages(plan).find { ns =>
       ns.exists {
         case f: FilterExec => f.condition.references.exists(_.name == "rule_id")
         case _ => false

@@ -10,10 +10,12 @@ Pair i runs `perfbench/run.py` once in each, on seed i of --seeds (the
 list repeats if shorter than --pairs); even pairs run BASE first, odd pairs
 CHANGE first, so a drift of the host does not favour one side. Prints, per
 pair, each side's value of the claim metric, the change/base ratio and both
-runs' steal; then the number of pairs the change wins on every end-to-end
-metric BENCHMARK.json declares, and each side's median and quartiles. A
-run that exits non-zero or reports failed passes is printed and counted as
-a loss. Standard library only.
+runs' steal and timed GC time; then the number of pairs the change wins on
+every end-to-end metric BENCHMARK.json declares, and each side's median and
+quartiles. A run that exits non-zero or reports failed passes is printed
+and counted as a loss. A lower-is-better metric that reads 0 (mem_peak_mb
+does when no collection starts during a timed pass) measured nothing: the
+pair prints `<metric> read 0` and the change does not win it.
 """
 
 import argparse
@@ -57,7 +59,9 @@ def value(rec, metric):
 def wins(better, base, change):
     if base is None or change is None:
         return False
-    return change > base if better == "higher" else change < base
+    if better == "higher":
+        return change > base
+    return change != 0 and change < base
 
 
 def quartiles(xs):
@@ -93,13 +97,20 @@ def main():
                     f.write(json.dumps(dict(got[side], side=side, pair=i)) + "\n")
         pairs.append(got)
         b, c = value(got["base"], a.claim), value(got["change"], a.claim)
-        steal = ["%.1f" % r["host"]["steal_s"] if r else "-" for r in (got["base"], got["change"])]
+        runs = (got["base"], got["change"])
+        steal = ["%.1f" % r["host"]["steal_s"] if r else "-" for r in runs]
+        gc = ["%.0f" % r["host"]["gc_ms_timed"] if r else "-" for r in runs]
         failed = [side for side in order if not got[side] or got[side]["error_frac"] > 0]
-        print("pair %2d seed %d %s first: %s base %s change %s ratio %s steal %s/%s s%s" % (
-            i + 1, seed, order[0], a.claim,
-            "%.4g" % b if b is not None else "FAILED", "%.4g" % c if c is not None else "FAILED",
-            "%.4f" % (c / b) if b and c is not None else "-", steal[0], steal[1],
-            " failed passes: " + ",".join(failed) if failed else ""), flush=True)
+        zeros = ["%s read 0 (%s)" % (m, side) for m, d in better.items() if d == "lower"
+                 for side in ("base", "change") if value(got[side], m) == 0]
+        print("pair %2d seed %d %s first: %s base %s change %s ratio %s steal %s/%s s "
+              "gc %s/%s ms%s%s" % (
+                  i + 1, seed, order[0], a.claim,
+                  "%.4g" % b if b is not None else "FAILED",
+                  "%.4g" % c if c is not None else "FAILED",
+                  "%.4f" % (c / b) if b and c is not None else "-", steal[0], steal[1],
+                  gc[0], gc[1], "".join("; " + z for z in zeros),
+                  " failed passes: " + ",".join(failed) if failed else ""), flush=True)
     print()
     for metric, direction in better.items():
         won = sum(wins(direction, value(p["base"], metric), value(p["change"], metric))
