@@ -1,19 +1,12 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-audit tool: print the formatted physical plan of one or more
   * SparkEntry queries. Usage: runMain graft.Explain <sfDir> <query>[,query…]
   */
 object Explain {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args.take(2)
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", 4)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", false)
-      .appName("graft-explain").getOrCreate()
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4").toInt)
     spark.sparkContext.setLogLevel("WARN")
     names.split(",").foreach { n =>
       println(s"==== $n ====")

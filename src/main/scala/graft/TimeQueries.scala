@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Ad-hoc per-query timing probe: `runMain graft.TimeQueries <sfDir> <q>...`
   * times each named [[SparkEntry.queries]] entry (min over 2 runs, the
   * bench's convention) at local[SPARK_GRAFT_CPUS]. The full-suite timing
@@ -12,13 +10,7 @@ object TimeQueries {
   def main(args: Array[String]): Unit = {
     require(args.length >= 2, "usage: TimeQueries <sfDir> <queryName>...")
     val sfDir = args(0)
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = LocalSession(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     spark.sparkContext.setLogLevel("ERROR")
     args.drop(1).foreach { q =>
       def once(): (Double, Long) = {

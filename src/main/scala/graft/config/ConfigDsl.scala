@@ -107,7 +107,7 @@ object Compiler {
       routeCounters: Seq[(String, Column, Column)] = Nil,
       statsFrame: Option[DataFrame] = None) {
     def sink(name: String): DataFrame = Router.sink(flagged, name)
-    def dropUnmatched: DataFrame = Router.dropUnmatched(flagged)
+    def dropUnmatched: DataFrame = Router.dropUnmatched(flagged, sinkNames)
 
     /** Per-named-log-path counters (reference syslogng_route_ingress_total /
       * _egress_total, tests/light logpath/__init__.py): ingress = rows that

@@ -1,7 +1,13 @@
 package graft.corpus
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StructField}
+
+import graft.parsers.{ParseStage, RowParser}
 
 /** Corpus down-sampling + vocabulary for training-data curation — the
   * operations that sit next to dedup in a real pipeline (balance languages
@@ -253,13 +259,16 @@ object Sampling {
     * docs that fit it, and its utilization ≥ first-fit/next-fit on the
     * same input.
     *
-    * Scale shape: packing is inherently sequential, so the parallel unit
+    * Batch shape: packing is inherently sequential, so the parallel unit
     * is the shard — one hash shuffle on the shard key, then a per-shard
-    * stream with O(open packs) state and an ordered-multiset best-fit
-    * lookup (O(log packs) per doc; shards are contiguous after the
-    * partition-local sort, so state resets on the key change and never
-    * holds more than one shard). 100 TB packs with zero coordination by
-    * choosing enough shards, exactly like [[packByBudget]].
+    * fold in one `Generate` (a non-deterministic
+    * [[graft.parsers.ParseGenerator]]) over the partition-local sort, with
+    * O(open packs) state and an ordered-multiset best-fit lookup
+    * (O(log packs) per doc; shards are contiguous after the sort, so state
+    * resets on the key change and never holds more than one shard). No
+    * predicate on an input column is pushed below the fold. 100 TB packs
+    * with zero coordination by choosing enough shards, exactly like
+    * [[packByBudget]].
     *
     * Deterministic end-to-end: shard/order must be content-derived (never
     * rand()); the (size desc, order asc) visit order and the tie rules
@@ -277,59 +286,53 @@ object Sampling {
       docs: DataFrame, shard: Column, size: Column, order: Column,
       budget: Long): DataFrame = {
     require(budget >= 1, s"budget must be >= 1, got $budget")
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-    import org.apache.spark.sql.graftbridge.Bridge
-    import org.apache.spark.sql.types.{IntegerType, LongType}
     val keyed = docs.withColumn("shard", shard)
       .withColumn("__bfd_sz", size.cast("long"))
     val sorted = keyed.repartition(col("shard"))
       .sortWithinPartitions(col("shard"), col("__bfd_sz").desc, order.asc)
-    val inSchema = sorted.schema
-    val shardIdx = inSchema.fieldIndex("shard")
-    val szIdx = inSchema.fieldIndex("__bfd_sz")
-    val shardType = inSchema(shardIdx).dataType
-    val inTypes = inSchema.fields.map(_.dataType)
-    val nIn = inSchema.length
-    val outSchema = inSchema.add("pack_id", LongType).add("pack_pos", IntegerType)
-    val rdd = Bridge.toInternalRdd(sorted).mapPartitions { it =>
-      // per-shard state: open packs as an ordered multiset keyed
-      // (remaining, packId) — iteratorFrom((sz, MinValue)) IS best-fit
-      // with the lowest-id tie-break; counts(pid) = insertions so far
-      val open = scala.collection.mutable.TreeMap.empty[(Long, Long), Unit]
-      val counts = scala.collection.mutable.ArrayBuffer.empty[Int]
-      var curShard: Any = null
-      var started = false
-      it.map { row =>
-        val sh = row.get(shardIdx, shardType)
-        if (!started || sh != curShard) {
-          open.clear(); counts.clear(); curShard = sh; started = true
-        }
-        val sz = if (row.isNullAt(szIdx)) 0L else row.getLong(szIdx)
-        val fit = open.iteratorFrom((sz, Long.MinValue))
-        val (packId, pos) =
-          if (fit.hasNext) {
-            val (rem, pid) = fit.next()._1
-            open.remove((rem, pid))
-            open.put((rem - sz, pid), ())
-            counts(pid.toInt) += 1
-            (pid, counts(pid.toInt))
-          } else {
-            val pid = counts.length.toLong
-            counts += 1
-            open.put((budget - sz, pid), ())
-            (pid, 1)
-          }
-        val out = new GenericInternalRow(nIn + 2)
-        var c = 0
-        while (c < nIn) { out.update(c, row.get(c, inTypes(c))); c += 1 }
-        out.update(nIn, packId)
-        out.update(nIn + 1, pos)
-        out: InternalRow
+    ParseStage(sorted, struct(col("shard"), col("__bfd_sz")),
+      BfdPacker(budget, keyed.schema("shard").dataType))
+      .drop("__bfd_sz")
+  }
+
+  /** [[packByBudgetBfd]]'s per-row step over `struct(shard, size)` rows
+    * that arrive sorted by (shard, size desc, order): each doc's
+    * (pack_id, pack_pos). The state is per task and resets when the shard
+    * changes. */
+  private final case class BfdPacker(budget: Long, shardType: DataType)
+      extends RowParser[InternalRow] {
+    def label: String = s"bfd_pack($budget)"
+    def fields: Seq[StructField] =
+      Seq(StructField("pack_id", LongType), StructField("pack_pos", IntegerType))
+    override def deterministic: Boolean = false
+    // open packs as an ordered multiset keyed (remaining, packId) —
+    // iteratorFrom((sz, MinValue)) IS best-fit with the lowest-id
+    // tie-break; counts(pid) = insertions so far
+    @transient private lazy val open = mutable.TreeMap.empty[(Long, Long), Unit]
+    @transient private lazy val counts = mutable.ArrayBuffer.empty[Int]
+    @transient private var shard: Any = _
+    @transient private var started = false
+
+    def parse(in: InternalRow): InternalRow = {
+      val sh = in.get(0, shardType)
+      if (!started || sh != shard) {
+        open.clear(); counts.clear(); shard = InternalRow.copyValue(sh); started = true
+      }
+      val sz = if (in.isNullAt(1)) 0L else in.getLong(1)
+      val fit = open.iteratorFrom((sz, Long.MinValue))
+      if (fit.hasNext) {
+        val (rem, pid) = fit.next()._1
+        open.remove((rem, pid))
+        open.put((rem - sz, pid), ())
+        counts(pid.toInt) += 1
+        InternalRow(pid, counts(pid.toInt))
+      } else {
+        val pid = counts.length.toLong
+        counts += 1
+        open.put((budget - sz, pid), ())
+        InternalRow(pid, 1)
       }
     }
-    Bridge.internalCreateDataFrame(sorted.sparkSession, rdd, outSchema)
-      .drop("__bfd_sz")
   }
 
   /** Pack ASSEMBLY — turn pack assignments ([[packByBudget]] /

@@ -6,9 +6,11 @@ import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
-import org.apache.spark.sql.graftbridge.Bridge
-import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructType}
+import org.apache.spark.sql.functions.{col, struct}
+import org.apache.spark.sql.types.{BooleanType, LongType, StructField}
+import org.apache.spark.unsafe.types.UTF8String
+
+import graft.parsers.{ParseStage, RowParser}
 
 /** group-lines(smart) — the full multi-language backtrace FSM (reference
   * lib/multi-line/smart-multi-line.c, table lib/multi-line/
@@ -30,12 +32,13 @@ import org.apache.spark.sql.types.{BooleanType, LongType, StructField, StructTyp
   * non-trace line is its own message, MLL_EXTRACTED immediately) or it
   * starts a new trace (MLL_REWIND_SEGMENT closes the previous block).
   *
-  * Batch shape: the FSM is sequential per key, so the scan runs as a
-  * per-partition InternalRow stage over `repartition(key) +
-  * sortWithinPartitions(key, order)` — one shuffle, the same cost class as
-  * the window-based multi-line modes, and the partition count (not the key
-  * count) bounds parallelism. Rows of one key never split across
-  * partitions, so executor-local state is exact.
+  * Batch shape: the FSM is sequential per key, so it runs as a [[Fold]] in
+  * one `Generate` (a non-deterministic [[graft.parsers.ParseGenerator]])
+  * over `repartition(key) + sortWithinPartitions(key, order)` — one
+  * shuffle, the same cost class as the window-based multi-line modes, and
+  * the partition count (not the key count) bounds parallelism. Rows of one
+  * key never split across partitions, so per-task state is exact, and no
+  * predicate on an input column is pushed below the fold.
   */
 object SmartMultiLine {
 
@@ -119,50 +122,45 @@ object SmartMultiLine {
     }
   }
 
+  /** The FSM as a per-row fold over `struct(key, text)` rows that arrive
+    * sorted by (key, order): each line's `__sml_start` and `__sml_block`.
+    * The state is per task and resets when the key changes; a null line is
+    * a non-trace line. */
+  private final case class Fold(fsm: Fsm) extends RowParser[InternalRow] {
+    def label: String = "smart_multi_line"
+    def fields: Seq[StructField] = Seq(
+      StructField("__sml_start", BooleanType, nullable = false),
+      StructField("__sml_block", LongType, nullable = false))
+    override def deterministic: Boolean = false
+    @transient private lazy val tracker = new Tracker(fsm)
+    @transient private var key: UTF8String = _
+    @transient private var block = 0L
+
+    def parse(in: InternalRow): InternalRow = {
+      val k = in.getUTF8String(0)
+      if (k != key) { tracker.reset(); key = if (k == null) null else k.clone(); block = 0L }
+      val line = in.getUTF8String(1)
+      val isStart = if (line == null) { tracker.reset(); true } else tracker.step(line.toString)
+      if (isStart) block += 1L
+      InternalRow(isStart, block)
+    }
+  }
+
   /** Annotate each row with `__sml_start` (block-start marker) and
     * `__sml_block` (per-key running block ordinal) by running the FSM over
-    * each key's lines in `order`. One shuffle (hash on key), per-partition
-    * sequential scan; null text is a non-trace line. The block id comes out
-    * of the same scan, so no window pass is needed downstream. */
+    * each key's lines in `order`. One shuffle (hash on key), then the
+    * [[Fold]] over the partition-local sort; null text is a non-trace line.
+    * The block id comes out of the same scan, so no window pass is needed
+    * downstream. */
   def annotateStarts(
       df: DataFrame, key: Column, order: Column, text: Column,
       fsm: Fsm = bundled): DataFrame = {
-    val spark = df.sparkSession
-    val prepared = df
+    val sorted = df
       .withColumn("__sml_key", key.cast("string"))
-      .withColumn("__sml_text", text.cast("string"))
       .repartition(col("__sml_key"))
       .sortWithinPartitions(col("__sml_key"), order)
-    val inSchema = prepared.schema
-    val keyIdx = inSchema.fieldIndex("__sml_key")
-    val textIdx = inSchema.fieldIndex("__sml_text")
-    val inTypes = inSchema.fields.map(_.dataType)
-    val nIn = inSchema.length
-    val outSchema = StructType(inSchema
-      :+ StructField("__sml_start", BooleanType, nullable = false)
-      :+ StructField("__sml_block", LongType, nullable = false))
-    val table = fsm
-    val rdd = Bridge.toInternalRdd(prepared).mapPartitions { it =>
-      val tracker = new Tracker(table)
-      var curKey: String = null
-      var block = 0L
-      it.map { row =>
-        val k = if (row.isNullAt(keyIdx)) null else row.getUTF8String(keyIdx).toString
-        if (k != curKey) { tracker.reset(); curKey = k; block = 0L }
-        val line = if (row.isNullAt(textIdx)) null else row.getUTF8String(textIdx).toString
-        val isStart = if (line == null) { tracker.reset(); true } else tracker.step(line)
-        if (isStart) block += 1L
-        val out = new GenericInternalRow(nIn + 2)
-        var c = 0
-        while (c < nIn) { out.update(c, row.get(c, inTypes(c))); c += 1 }
-        out.update(nIn, isStart)
-        out.update(nIn + 1, block)
-        out: InternalRow
-      }
-    }
-    Bridge.internalCreateDataFrame(spark, rdd, outSchema)
-      .drop("__sml_key", "__sml_text")
+    ParseStage(sorted, struct(col("__sml_key"), text.cast("string")), Fold(fsm))
+      .drop("__sml_key")
   }
 
-  private def col(n: String): Column = org.apache.spark.sql.functions.col(n)
 }

@@ -193,7 +193,7 @@ object CiscoParser {
     ParseStage(ParseStage.dropStale(df, parser), textCol, parser)
   }
 
-  final case class Parser(opt: SyslogFormat.Options, prefix: String) extends RowParser {
+  final case class Parser(opt: SyslogFormat.Options, prefix: String) extends RowParser[UTF8String] {
     def label: String = "cisco-parser"
     def fields: Seq[StructField] = Seq(
       StructField(s"${prefix}pri", IntegerType, nullable = true),

@@ -57,7 +57,7 @@ object GrokStage {
   private val errTags = new GenericArrayData(Array[Any](UTF8String.fromString(ParseErrorTag)))
   private val emptyFields = new ArrayBasedMapData(noTags, noTags)
 
-  final case class Parser(rules: Seq[GrokRule]) extends RowParser {
+  final case class Parser(rules: Seq[GrokRule]) extends RowParser[UTF8String] {
     def label: String = rules.map(_.id).mkString("grok[", ",", "]")
     def fields: Seq[StructField] = Seq(
       StructField("fields", FieldsType, nullable = false),

@@ -1,6 +1,6 @@
 package graft.parsers
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
 import org.apache.spark.sql.catalyst.expressions.{Expression, Generator, UnaryExpression}
@@ -12,23 +12,30 @@ import org.apache.spark.sql.graftbridge.Bridge
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
-/** A parser's per-row function over one text column: the fields it appends
-  * and how one text value becomes one output row. Per-task state (compiled
-  * patterns, matchers, scratch buffers) lives in `@transient lazy val`s, so
-  * each task builds its own after deserialization — the analog of the
-  * reference compiling a parser once at config time.
+/** A stage's per-row function over one input value (the text column for a
+  * parser, a struct of the inputs for a fold): the fields it appends and
+  * how one input value becomes one output row. Per-task state (compiled
+  * patterns, matchers, scratch buffers, a fold's running state) lives in
+  * `@transient` members, so each task builds its own after
+  * deserialization — the analog of the reference compiling a parser once
+  * at config time.
   */
-trait RowParser extends Serializable {
+trait RowParser[In] extends Serializable {
   /** Short plan label (rule ids, never regexes) shown by `explain`. */
   def label: String
   def fields: Seq[StructField]
-  /** The appended values for `text` (null when the input is null), in
-    * `fields` order; a null result drops the input row. */
-  def parse(text: UTF8String): InternalRow
+  /** False for a fold, whose output depends on the rows before it in the
+    * partition. The generator is then non-deterministic, so Catalyst keeps
+    * every predicate above it: a filter on an input column pushed below the
+    * fold would change what the fold sees. */
+  def deterministic: Boolean = true
+  /** The appended values for `in`, in `fields` order; a null result drops
+    * the input row. */
+  def parse(in: In): InternalRow
 }
 
-/** A parse stage as a Catalyst generator: one output row per input row (no
-  * row when the parser returns null). It plans as its own `Generate`
+/** A parse stage (or a fold) as a Catalyst generator: one output row per
+  * input row (no row when the parser returns null). It plans as its own `Generate`
   * operator, so Catalyst prunes the columns it does not need below it,
   * keeps predicates on its outputs above it (the parse runs once per row),
   * and batch and streaming frames run the same code. The generated code
@@ -36,19 +43,20 @@ trait RowParser extends Serializable {
   * codegen: input columns and parsed fields pass to the next operator as
   * variables, with no joined row or extra projection per row.
   */
-final case class ParseGenerator(child: Expression, parser: RowParser)
+final case class ParseGenerator(child: Expression, parser: RowParser[_])
     extends UnaryExpression with Generator {
   override lazy val elementSchema: StructType = StructType(parser.fields)
+  override lazy val deterministic: Boolean = parser.deterministic && child.deterministic
   override def eval(input: InternalRow): IterableOnce[InternalRow] =
-    ParseGenerator.rows(parser.parse(child.eval(input).asInstanceOf[UTF8String]))
+    ParseGenerator.rows(parser.asInstanceOf[RowParser[Any]].parse(child.eval(input)))
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val text = child.genCode(ctx)
-    val p = ctx.addReferenceObj("parser", parser, classOf[RowParser].getName)
+    val in = child.genCode(ctx)
+    val p = ctx.addReferenceObj("parser", parser, classOf[RowParser[_]].getName)
     val rows = JavaCode.variable(ctx.freshName("parsed"), classOf[IterableOnce[_]])
     ExprCode(code"""
-      |${text.code}
+      |${in.code}
       |${classOf[IterableOnce[_]].getName}<InternalRow> $rows = ${classOf[ParseGenerator].getName}.rows(
-      |  $p.parse(${text.isNull} ? null : ${text.value}));
+      |  $p.parse(${in.isNull} ? null : ${in.value}));
       |""".stripMargin, FalseLiteral, rows)
   }
   override def toString: String = s"${parser.label}($child)"
@@ -63,15 +71,19 @@ object ParseGenerator {
 object ParseStage {
 
   /** `df` with `parser`'s fields appended, parsed from `textCol`. */
-  def apply(df: DataFrame, textCol: String, parser: RowParser): DataFrame =
-    df.select(col("*"),
-      Bridge.column(ParseGenerator(UnresolvedAttribute.quoted(textCol), parser)))
+  def apply(df: DataFrame, textCol: String, parser: RowParser[UTF8String]): DataFrame =
+    apply(df, Bridge.column(UnresolvedAttribute.quoted(textCol)), parser)
+
+  /** `df` with `parser`'s fields appended, computed from `input`. A fold
+    * sees the rows in `df`'s partition order: `Generate` keeps it. */
+  def apply(df: DataFrame, input: Column, parser: RowParser[_]): DataFrame =
+    df.select(col("*"), Bridge.column(ParseGenerator(Bridge.expression(input), parser)))
 
   /** Output stage columns that `df` already carries, dropped before the
     * stage re-adds them: re-running a parser (the same parser in two log
     * paths, or a mid-pipeline re-parse) OVERWRITES its previous output like
     * the reference does, instead of duplicating column names. */
-  def dropStale(df: DataFrame, parser: RowParser): DataFrame = {
+  def dropStale(df: DataFrame, parser: RowParser[_]): DataFrame = {
     val stale = parser.fields.map(_.name).filter(df.columns.contains)
     if (stale.isEmpty) df else df.drop(stale: _*)
   }

@@ -578,7 +578,7 @@ object PatternDb {
   private val errTags = new GenericArrayData(Array[Any](UTF8String.fromString(ParseErrorTag)))
   private val emptyFields = new ArrayBasedMapData(noAny, noAny)
 
-  final case class Parser(rules: Seq[PdbRule]) extends RowParser {
+  final case class Parser(rules: Seq[PdbRule]) extends RowParser[UTF8String] {
     def label: String = rules.map(_.id).mkString("patterndb[", ",", "]")
     def fields: Seq[StructField] = Seq(
       StructField("pdb_fields", FieldsType, nullable = false),

@@ -290,7 +290,7 @@ object Scanners {
     ParseStage(df, textCol, CsvParser(names, o, prefix, partialFill))
 
   final case class CsvParser(names: Seq[String], o: CsvOptions, prefix: String,
-      partialFill: Boolean) extends RowParser {
+      partialFill: Boolean) extends RowParser[UTF8String] {
     def label: String = names.mkString("csv-parser[", ",", "]")
     def fields: Seq[StructField] =
       names.map(StructField(_, StringType, nullable = true)) :+
@@ -320,7 +320,7 @@ object Scanners {
       prefix: String = "kv_"): DataFrame =
     ParseStage(df, textCol, KvParser(o, prefix))
 
-  final case class KvParser(o: KvOptions, prefix: String) extends RowParser {
+  final case class KvParser(o: KvOptions, prefix: String) extends RowParser[UTF8String] {
     def label: String = "kv-parser"
     def fields: Seq[StructField] = Seq(
       StructField(s"${prefix}fields",

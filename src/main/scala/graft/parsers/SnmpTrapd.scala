@@ -345,7 +345,7 @@ object SnmpTrapd {
       prefix: String = ".snmp.", setMessageMacro: Boolean = true): DataFrame =
     ParseStage(df, textCol, Parser(prefix, setMessageMacro))
 
-  final case class Parser(prefix: String, setMessageMacro: Boolean) extends RowParser {
+  final case class Parser(prefix: String, setMessageMacro: Boolean) extends RowParser[UTF8String] {
     def label: String = "snmptrapd-parser"
     def fields: Seq[StructField] = Seq(
       StructField("snmp_fields",

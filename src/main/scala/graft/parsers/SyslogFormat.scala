@@ -598,7 +598,7 @@ object SyslogFormat {
     ParseStage(ParseStage.dropStale(df, parser), textCol, parser)
   }
 
-  final case class Parser(opt: Options, prefix: String) extends RowParser {
+  final case class Parser(opt: Options, prefix: String) extends RowParser[UTF8String] {
     def label: String = "syslog-parser"
     def fields: Seq[StructField] = Seq(
       StructField(s"${prefix}pri", IntegerType, nullable = false),

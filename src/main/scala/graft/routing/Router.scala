@@ -60,21 +60,12 @@ object Router {
       s.name -> (coalesce(s.predicate, lit(false)) && !anyNonFallback)
     }
     val flags = (nonFallbackFlags ++ fallbackFlags).toMap
-    // every flag in one projection (one analysis, not one per column);
-    // `routes` reads the flag columns from a second one. That keeps the
-    // predicates (the `rlike` among them) out of `routes` only while the
-    // flags are read too: where only `routes` survives column pruning, the
-    // optimizer collapses the two projections and inlines every predicate
-    // into the lambda, which evaluates interpreted. Fan-outs therefore read
-    // the flags (Pipeline.fanOut); `routes` is kept for callers that want
-    // the sink list as one value
+    // every flag in one projection; `routes` is built from the flags with no lambda
+    val none = typedlit(Seq.empty[String])
     df.withColumns(ListMap(specs.map(s =>
         s"route_${s.name}" -> coalesce(flags(s.name), lit(false))): _*))
-      .withColumn(
-        "routes",
-        filter(
-          array(specs.map(s => when(col(s"route_${s.name}"), lit(s.name))): _*),
-          x => x.isNotNull))
+      .withColumn("routes", concat(none +: specs.map(s =>
+        when(col(s"route_${s.name}"), array(lit(s.name))).otherwise(none)): _*))
   }
 
   /** Per-sink view: call after `withRouteFlags`. Each such view re-runs the
@@ -85,9 +76,9 @@ object Router {
   def sink(flagged: DataFrame, name: String): DataFrame =
     flagged.filter(col(s"route_$name"))
 
-  /** `drop-unmatched` — rows delivered nowhere are dropped. */
-  def dropUnmatched(flagged: DataFrame): DataFrame =
-    flagged.filter(size(col("routes")) > 0)
+  /** `drop-unmatched` — rows delivered to none of `sinks` are dropped. */
+  def dropUnmatched(flagged: DataFrame, sinks: Seq[String]): DataFrame =
+    flagged.filter(sinks.map(s => col(s"route_$s")).reduceOption(_ || _).getOrElse(lit(false)))
 
   /** if/elif/else sugar (reference lib/cfg-tree.c:1279-1346) compiles to an
     * exclusive when/otherwise ladder over branch names.

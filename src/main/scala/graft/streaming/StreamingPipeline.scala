@@ -40,8 +40,9 @@ private final case class SessionState(
   *    source discovers new files — the wildcard-file() analog, reference
   *    modules/affile/wildcard-source.c), offsets tracked in the checkpoint
   *    (the reference's persist-state file positions, lib/logreader bookmark)
-  *  - the parse/enrich/route stages are the SAME code as batch (narrow
-  *    transforms are streaming-safe)
+  *  - the parse and route stages are the SAME code as batch (narrow
+  *    transforms are streaming-safe); `parsed` does not run the batch
+  *    enrichment, so streamed rows carry no lookup columns
   *  - grouping-by with timeout()/trigger() maps to flatMapGroupsWithState
   *    with event-time timeout (the reference's timer-wheel advanced by
   *    message timestamps, modules/correlation/grouping-parser.c:80-127)
@@ -58,7 +59,7 @@ object StreamingPipeline {
       .schema("conv_id string, turn_idx int, role string, text string, tool string, ts timestamp")
       .parquet(dir)
 
-  /** parse → route flags, streaming-safe (same stages as batch). */
+  /** parse → route flags, streaming-safe (the batch stages minus enrich). */
   def parsed(stream: DataFrame): DataFrame = {
     val p = GrokStage(stream, "text", GrokStage.transcriptRules)
     graft.Pipeline.withRoutes(p)

@@ -1927,6 +1927,16 @@ class CorpusSpec extends SparkSpec {
     }
   }
 
+  test("BFD packing: a filter on an input column does not reach below the packer") {
+    import graft.corpus.Sampling
+    val df = (0 until 200).map(i => (i.toLong, 1L + (i * 37 % 300).toLong)).toDF("doc_id", "sz")
+    val packed = Sampling.packByBudgetBfd(
+      df, pmod(col("doc_id"), lit(3)), col("sz"), col("doc_id"), 512L)
+    val want = packed.collect().filter(_.getAs[Long]("doc_id") > 100L).toSet
+    assert(want.nonEmpty)
+    assert(packed.filter(col("doc_id") > 100L).collect().toSet === want)
+  }
+
   test("epochPlan: proportional when uncapped; capped sources water-fill the rest") {
     import graft.corpus.Sampling
     // uncapped: e_s = B·w_s / tok_s (weights already normalized)

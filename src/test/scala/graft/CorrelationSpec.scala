@@ -317,6 +317,18 @@ class CorrelationSpec extends SparkSpec {
     assert(got === Seq(php.mkString("\n"), "plain line", dart.mkString("\n")))
   }
 
+  test("group-lines smart: a filter on an input column does not reach below the FSM") {
+    val lines = Seq("unrelated", "Traceback (most recent call last):",
+      "File \"./x.py\", line 62, in <module>", "  x()", "plain")
+    val df = (lines.map(("a", _)) ++ lines.reverse.map(("b", _))).zipWithIndex
+      .map { case ((k, t), i) => (k, i, t) }.toDF("k", "i", "text")
+    val annotated = graft.operators.SmartMultiLine.annotateStarts(
+      df, col("k"), col("i"), col("text"))
+    val want = annotated.collect().filter(_.getAs[Int]("i") > 1).toSet
+    assert(want.nonEmpty)
+    assert(annotated.filter(col("i") > 1).collect().toSet === want)
+  }
+
   test("grouping-by trigger + inject modes (test_grouping_by.c:65-150)") {
     val base = java.sql.Timestamp.valueOf("2026-01-01 00:00:00")
     def t(s: Int) = new java.sql.Timestamp(base.getTime + s * 1000L)

@@ -1,13 +1,18 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.catalyst.expressions.{AttributeSet, LambdaFunction, RLike}
-import org.apache.spark.sql.execution.{FilterExec, GenerateExec, InputAdapter, SparkPlan, WholeStageCodegenExec}
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+import org.apache.spark.sql.execution.{FilterExec, GenerateExec, InputAdapter, SortExec, SparkPlan, WholeStageCodegenExec}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, AdaptiveSparkPlanHelper}
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
 import org.apache.spark.sql.execution.joins.BaseJoinExec
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.ArrayType
 
+import graft.operators.Correlation
 import graft.parsers.ParseGenerator
+import graft.routing.Router
 
 /** Scale-shape regression gate: the physical plan of every oracle-checked
   * query must stay the plan we'd want on a 1000-executor cluster. These
@@ -19,12 +24,14 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
   private def planOf(name: String): String =
     SparkEntry.queries(name)(spark, sfUnit).queryExecution.executedPlan.toString()
 
-  /** The physical plan of `name` before it runs (adaptive wrapper removed). */
   private def physicalOf(name: String): SparkPlan =
-    SparkEntry.queries(name)(spark, sfUnit).queryExecution.executedPlan match {
-      case a: AdaptiveSparkPlanExec => a.executedPlan
-      case p => p
-    }
+    physical(SparkEntry.queries(name)(spark, sfUnit))
+
+  /** The physical plan of `df` before it runs (adaptive wrapper removed). */
+  private def physical(df: DataFrame): SparkPlan = df.queryExecution.executedPlan match {
+    case a: AdaptiveSparkPlanExec => a.executedPlan
+    case p => p
+  }
 
   private def parseGenerates(p: SparkPlan): Seq[GenerateExec] =
     p.collect { case g: GenerateExec if g.generator.isInstanceOf[ParseGenerator] => g }
@@ -152,8 +159,15 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     // flags so the predicates stay in a codegen'd projection. The flagged
     // frame is cached by PipelineSpec and would hide the predicates
     spark.sharedState.cacheManager.clearCache()
-    Seq("q_sink_counts", "q_route").foreach { name =>
-      val df = SparkEntry.queries(name)(spark, sfUnit)
+    // `routes` alone and drop-unmatched must not pull the predicates into a
+    // lambda either
+    val flagged = Pipeline.flagged(spark, sfUnit)
+    Seq(
+      "q_sink_counts" -> SparkEntry.queries("q_sink_counts")(spark, sfUnit),
+      "q_route" -> SparkEntry.queries("q_route")(spark, sfUnit),
+      "routes only" -> flagged.select("routes"),
+      "drop-unmatched" -> Router.dropUnmatched(flagged, Seq("all", "tool_calls", "errors", "fallback"))
+    ).foreach { case (name, df) =>
       df.collect()
       val plan = df.queryExecution.executedPlan
       val lambdas = collect(plan) {
@@ -221,17 +235,40 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     val nov = planOf("q_corpus_novelty")
     assert(nov.contains("BroadcastHashJoin"),
       s"novelty audit must broadcast the bench postings:\n$nov")
-    // BFD packing: the packer is an InternalRow stage over a
-    // shard-repartitioned sort (it depends on row order within a
-    // partition, so it stays on the RDD path), so its shard Exchange lives
-    // BELOW the ExistingRDD boundary; the visible plan must
-    // add NO further key shuffle — everything above the stage is a pure
-    // projection
-    val bfd = planOf("q_corpus_pack_bfd")
-    assert(bfd.contains("Scan ExistingRDD"),
-      s"BFD packing should be an InternalRow stage:\n$bfd")
-    assert(keyShuffles(bfd) === 0,
-      s"no key shuffle above the packing stage, saw ${keyShuffles(bfd)}:\n$bfd")
+    // BFD packing: the packer is a fold over a shard-repartitioned sort;
+    // the shard Exchange is the only key shuffle, everything above the
+    // fold is a pure projection
+    val bfd = physicalOf("q_corpus_pack_bfd")
+    assertFoldShape("q_corpus_pack_bfd", bfd)
+    assert(keyShuffles(bfd.toString) === 1,
+      s"the shard exchange is the only key shuffle, saw ${keyShuffles(bfd.toString)}:\n$bfd")
+  }
+
+  /** A fold (a non-deterministic parse `Generate`) runs in the plan, with
+    * no RDD leaf, over a Sort over a hash exchange: the order it depends
+    * on is planned right below it. */
+  private def assertFoldShape(name: String, p: SparkPlan): Unit = {
+    assert(!p.toString.contains("ExistingRDD"), s"$name lowers to an RDD:\n$p")
+    val folds = parseGenerates(p).filterNot(_.generator.deterministic)
+    assert(folds.length === 1, s"$name: expected one fold Generate:\n$p")
+    def chain(n: SparkPlan): List[SparkPlan] =
+      n :: (n.children match { case Seq(c) => chain(c); case _ => Nil })
+    val below = chain(folds.head.child)
+    val sort = below.indexWhere(_.isInstanceOf[SortExec])
+    val shuffle = below.indexWhere {
+      case e: ShuffleExchangeExec => e.outputPartitioning.isInstanceOf[HashPartitioning]
+      case _ => false
+    }
+    assert(sort >= 0 && shuffle > sort,
+      s"$name: the fold must sit over a Sort over its key shuffle:\n$p")
+  }
+
+  test("smart multi-line runs as a fold over the key sort, no RDD") {
+    import spark.implicits._
+    val df = Seq(("k", 0, "Traceback (most recent call last):"), ("k", 1, "  x()"))
+      .toDF("k", "i", "text")
+    assertFoldShape("groupLines(Smart)", physical(
+      Correlation.groupLines(df, col("k"), col("i"), col("text"), Correlation.Smart)))
   }
 
   test("round-5 additions: chunking/buckets/assembly keep their scale shapes") {

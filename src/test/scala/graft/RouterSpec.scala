@@ -73,6 +73,6 @@ class RouterSpec extends SparkSpec {
 
   test("drop-unmatched removes rows delivered nowhere") {
     val f = Router.withRouteFlags(rows, Seq(RouteSpec("pa", col("kind") === "a")))
-    assert(Router.dropUnmatched(f).select("id").as[Int].collect().toSet == Set(1))
+    assert(Router.dropUnmatched(f, Seq("pa")).select("id").as[Int].collect().toSet == Set(1))
   }
 }

@@ -5,13 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session: one local SparkSession for the whole test JVM. */
 object TestSpark {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName("graft-test")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = LocalSession(4)
 }
 
 abstract class SparkSpec extends AnyFunSuite {
