@@ -5,13 +5,15 @@ import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 
 import javax.imageio.ImageIO
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
+import graft.parsers.ParseStage
+
 /** Multimodal column handling: image/audio/video payloads ride as opaque
   * `binary` columns with a typed metadata struct; decode / resize /
-  * frame-sample / feature-extract run per-partition over the binary batches.
+  * frame-sample / feature-extract run per row over the binary column.
   *
   * The image path is REAL, zero new dependencies — the JDK ships codecs:
   *
@@ -31,10 +33,12 @@ import org.apache.spark.sql.types._
   *    histogram over the decoded raster (byte histogram fallback for
   *    payloads no JDK codec reads).
   *
-  * Spark shape: every operator is a narrow per-partition transform — one
-  * codec context per partition, no shuffle; heavy payloads should set
-  * `spark.sql.files.maxPartitionBytes` low enough that a partition of
-  * payloads fits executor memory. `ImageIO.setUseCache(false)` keeps the
+  * Spark shape: every stage is a per-row codec run as a
+  * [[graft.parsers.ParseStage]] (one `Generate`, no shuffle), so Catalyst
+  * prunes the columns below it and moves filters on its input columns
+  * beneath it; heavy payloads should set `spark.sql.files.maxPartitionBytes`
+  * low enough that a partition of payloads fits executor memory.
+  * `ImageIO.setUseCache(false)` (once per JVM) keeps the
   * JDK codecs in-memory (the default spills every stream to a temp file —
   * a per-row disk write on the hot path).
   */
@@ -122,17 +126,21 @@ object Multimodal {
     * the stand-in for reading a blob/fileref column, except the bytes are
     * genuine PNG/JPEG/GIF files the decode stage must actually parse.
     */
-  def withPayload(docs: DataFrame, textCol: String): DataFrame = {
-    val inSchema = docs.schema
-    val outSchema = inSchema.add(StructField("payload", BinaryType, nullable = false))
-    val textIdx = inSchema.fieldIndex(textCol)
-    docs.mapPartitions { it =>
-      it.map { row =>
-        val text = row.getString(textIdx)
-        val (fmt, w, h) = geometryOf(text)
-        Row.fromSeq(row.toSeq :+ encodeImage(fmt, w, h, seed = text.length.toLong))
-      }
-    }(Encoders.row(outSchema))
+  def withPayload(docs: DataFrame, textCol: String): DataFrame =
+    ParseStage.map[String](docs, col(textCol), Payload) { text =>
+      val (fmt, w, h) = geometryOf(text)
+      encodeImage(fmt, w, h, seed = text.length.toLong)
+    }
+
+  private val Payload = StructField("payload", BinaryType, nullable = false)
+
+  /** The JDK image codecs, switched to in-memory streams once per JVM. */
+  private lazy val inMemoryCodecs: Unit = ImageIO.setUseCache(false)
+
+  /** `bytes` decoded by a JDK codec; null when none reads it. */
+  private def readImage(bytes: Array[Byte]): BufferedImage = {
+    inMemoryCodecs
+    try ImageIO.read(new ByteArrayInputStream(bytes)) catch { case _: Exception => null }
   }
 
   // ------------------------------------------------ header-only metadata
@@ -189,22 +197,17 @@ object Multimodal {
     ("unknown", 0, 0, n)
   }
 
-  /** Per-partition decode of the `payload` binary column → `meta` struct.
-    * mapPartitions (not a per-row UDF) so batches stay together; the
-    * header parse never rasterizes, so this streams at scan speed.
+  /** Decode of the `payload` binary column → `meta` struct, one
+    * `Generate` (not a UDF: a filter on `meta` stays above it, so each
+    * payload decodes once); the header parse never rasterizes, so this
+    * streams at scan speed.
     */
-  def decode(df: DataFrame): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = inSchema.add(StructField("meta", MetaSchema, nullable = false))
-    val payloadIdx = inSchema.fieldIndex("payload")
-    df.mapPartitions { it =>
-      it.map { row =>
-        val bytes = row.getAs[Array[Byte]](payloadIdx)
-        val (fmt, w, h, n) = decodeMeta(bytes)
-        Row.fromSeq(row.toSeq :+ Row(fmt, w, h, n))
-      }
-    }(Encoders.row(outSchema))
-  }
+  def decode(df: DataFrame): DataFrame =
+    ParseStage.map[Array[Byte]](df, col("payload"),
+        StructField("meta", MetaSchema, nullable = false)) { bytes =>
+      val (fmt, w, h, n) = decodeMeta(bytes)
+      Row(fmt, w, h, n)
+    }
 
   /** Target geometry under a `maxSide` bound, integer-exact (no float
     * rounding, so an oracle recomputes it with integer division):
@@ -218,79 +221,69 @@ object Multimodal {
   /** REAL raster resize: decode with the JDK codec, bilinear-scale onto a
     * BufferedImage of the exact [[targetGeometry]], re-encode in the
     * source format, refresh `meta` from the new payload. Payloads no JDK
-    * codec reads pass through untouched. Narrow per-partition transform.
+    * codec reads pass through untouched. The new `payload` and `meta`
+    * replace the old columns in place, so the schema does not change.
     */
   def resize(df: DataFrame, maxSide: Int): DataFrame = {
     require(maxSide >= 1, s"maxSide must be >= 1, got $maxSide")
-    val inSchema = df.schema
-    require(inSchema.fieldNames.contains("meta"), "resize runs after decode()")
-    val payloadIdx = inSchema.fieldIndex("payload")
-    val metaIdx = inSchema.fieldIndex("meta")
-    df.mapPartitions { it =>
-      ImageIO.setUseCache(false)
-      it.map { row =>
-        val bytes = row.getAs[Array[Byte]](payloadIdx)
-        val meta = row.getStruct(metaIdx)
-        val fmt = meta.getString(0)
-        val img =
-          try ImageIO.read(new ByteArrayInputStream(bytes)) catch { case _: Exception => null }
-        if (img == null) row // not an image the JDK reads: pass through
-        else {
-          val (nw, nh) = targetGeometry(img.getWidth, img.getHeight, maxSide)
-          val scaled = new BufferedImage(nw, nh, BufferedImage.TYPE_INT_RGB)
-          val g = scaled.createGraphics()
-          g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
-            java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
-          g.drawImage(img, 0, 0, nw, nh, null)
-          g.dispose()
-          val out = new ByteArrayOutputStream()
-          ImageIO.write(scaled, fmt, out)
-          val newBytes = out.toByteArray
-          Row.fromSeq(row.toSeq.updated(payloadIdx, newBytes)
-            .updated(metaIdx, Row(fmt, nw, nh, newBytes.length.toLong)))
-        }
+    require(df.schema.fieldNames.contains("meta"), "resize runs after decode()")
+    val out = StructType(Seq(df.schema("payload"), df.schema("meta")))
+    ParseStage.map[Row](df, struct(col("payload"), col("meta")),
+        StructField("__resized", out, nullable = false)) { row =>
+      val bytes = row.getAs[Array[Byte]](0)
+      val fmt = row.getStruct(1).getString(0)
+      val img = readImage(bytes)
+      if (img == null) row // not an image the JDK reads: pass through
+      else {
+        val (nw, nh) = targetGeometry(img.getWidth, img.getHeight, maxSide)
+        val scaled = new BufferedImage(nw, nh, BufferedImage.TYPE_INT_RGB)
+        val g = scaled.createGraphics()
+        g.setRenderingHint(java.awt.RenderingHints.KEY_INTERPOLATION,
+          java.awt.RenderingHints.VALUE_INTERPOLATION_BILINEAR)
+        g.drawImage(img, 0, 0, nw, nh, null)
+        g.dispose()
+        val out = new ByteArrayOutputStream()
+        ImageIO.write(scaled, fmt, out)
+        val newBytes = out.toByteArray
+        Row(newBytes, Row(fmt, nw, nh, newBytes.length.toLong))
       }
-    }(Encoders.row(inSchema))
+    }.withColumns(Map("payload" -> col("__resized.payload"), "meta" -> col("__resized.meta")))
+      .drop("__resized")
   }
 
   /** REAL frame sampler over multi-frame containers: an `ImageReader`
     * walks the payload's frames (animated GIF in the JDK), every-nth frame
     * is re-encoded as PNG into the `frame` column with its index. Single
     * -frame images emit frame 0; unreadable payloads emit no rows (they
-    * are not frame sources). flatMap row explosion, narrow.
+    * are not frame sources). A 0..n-row stage, narrow.
     */
   def frameSample(df: DataFrame, everyNth: Int, maxFrames: Int = 16): DataFrame = {
     require(everyNth >= 1, s"everyNth must be >= 1, got $everyNth")
     require(maxFrames >= 1, s"maxFrames must be >= 1, got $maxFrames")
-    val inSchema = df.schema
-    val outSchema = inSchema
-      .add(StructField("frame_idx", IntegerType, nullable = false))
-      .add(StructField("frame", BinaryType, nullable = false))
-    val payloadIdx = inSchema.fieldIndex("payload")
-    df.mapPartitions { it =>
-      ImageIO.setUseCache(false)
-      it.flatMap { row =>
-        val bytes = row.getAs[Array[Byte]](payloadIdx)
-        val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(bytes))
-        val readers = ImageIO.getImageReaders(iis)
-        if (!readers.hasNext) { iis.close(); Seq.empty[Row] }
-        else {
-          val reader = readers.next()
-          try {
-            reader.setInput(iis)
-            val nFrames = math.max(1, reader.getNumImages(true))
-            (0 until nFrames by everyNth).take(maxFrames).flatMap { f =>
-              try {
-                val img = reader.read(f)
-                val out = new ByteArrayOutputStream()
-                ImageIO.write(img, "png", out)
-                Some(Row.fromSeq(row.toSeq :+ f :+ out.toByteArray))
-              } catch { case _: Exception => None }
-            }
-          } finally { reader.dispose(); iis.close() }
-        }
+    val out = StructType(Seq(
+      StructField("frame_idx", IntegerType, nullable = false),
+      StructField("frame", BinaryType, nullable = false)))
+    ParseStage.flatMap[Array[Byte]](df, col("payload"), out) { bytes =>
+      inMemoryCodecs
+      val iis = ImageIO.createImageInputStream(new ByteArrayInputStream(bytes))
+      val readers = ImageIO.getImageReaders(iis)
+      if (!readers.hasNext) { iis.close(); Seq.empty[Row] }
+      else {
+        val reader = readers.next()
+        try {
+          reader.setInput(iis)
+          val nFrames = math.max(1, reader.getNumImages(true))
+          (0 until nFrames by everyNth).take(maxFrames).flatMap { f =>
+            try {
+              val img = reader.read(f)
+              val out = new ByteArrayOutputStream()
+              ImageIO.write(img, "png", out)
+              Some(Row(f, out.toByteArray))
+            } catch { case _: Exception => None }
+          }
+        } finally { reader.dispose(); iis.close() }
       }
-    }(Encoders.row(outSchema))
+    }
   }
 
   // -------------------------------------------------- audio (WAV / AIFF)
@@ -405,21 +398,12 @@ object Multimodal {
     * deterministically from the text ([[audioGeometryOf]]) — genuine
     * WAV/AIFF files the decode stage must actually chunk-walk.
     */
-  def withAudioPayload(docs: DataFrame, textCol: String): DataFrame = {
-    val inSchema = docs.schema
-    val outSchema = inSchema.add(StructField("payload", BinaryType, nullable = false))
-    val textIdx = inSchema.fieldIndex(textCol)
-    docs.mapPartitions { it =>
-      it.map { row =>
-        val text = row.getString(textIdx)
-        val (container, rate, channels, frames) = audioGeometryOf(text)
-        val bytes =
-          if (container == "wav") encodeWav(rate, channels, frames, text.length.toLong)
-          else encodeAiff(rate, channels, frames, text.length.toLong)
-        Row.fromSeq(row.toSeq :+ bytes)
-      }
-    }(Encoders.row(outSchema))
-  }
+  def withAudioPayload(docs: DataFrame, textCol: String): DataFrame =
+    ParseStage.map[String](docs, col(textCol), Payload) { text =>
+      val (container, rate, channels, frames) = audioGeometryOf(text)
+      if (container == "wav") encodeWav(rate, channels, frames, text.length.toLong)
+      else encodeAiff(rate, channels, frames, text.length.toLong)
+    }
 
   /** Header-only audio metadata: a RIFF/FORM chunk WALK that reads fmt/COMM
     * and the data/SSND size but never the sample bodies (the same
@@ -475,19 +459,14 @@ object Multimodal {
     unknown
   }
 
-  /** Per-partition header decode of the audio `payload` → `audio_meta`
-    * struct — streams at scan speed, never touches sample data. */
-  def decodeAudio(df: DataFrame): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = inSchema.add(StructField("audio_meta", AudioMetaSchema, nullable = false))
-    val payloadIdx = inSchema.fieldIndex("payload")
-    df.mapPartitions { it =>
-      it.map { row =>
-        val (c, r, ch, bits, frames, ms, n) = decodeAudioMeta(row.getAs[Array[Byte]](payloadIdx))
-        Row.fromSeq(row.toSeq :+ Row(c, r, ch, bits, frames, ms, n))
-      }
-    }(Encoders.row(outSchema))
-  }
+  /** Header decode of the audio `payload` → `audio_meta` struct — streams
+    * at scan speed, never touches sample data. */
+  def decodeAudio(df: DataFrame): DataFrame =
+    ParseStage.map[Array[Byte]](df, col("payload"),
+        StructField("audio_meta", AudioMetaSchema, nullable = false)) { bytes =>
+      val (c, r, ch, bits, frames, ms, n) = decodeAudioMeta(bytes)
+      Row(c, r, ch, bits, frames, ms, n)
+    }
 
   /** Perceptual audio hash: decode the REAL PCM-16 sample body (RIFF
     * chunk walk + LE samples for WAV, FORM/SSND + BE for AIFF — the first
@@ -499,16 +478,9 @@ object Multimodal {
     * Every mean is one exact-integer division, so an oracle recomputes
     * the hash arithmetically from the fixture's sample formula.
     * Unreadable payloads hash to "". */
-  def audioEnvelopeHash(df: DataFrame): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = inSchema.add(StructField("ahash", StringType, nullable = false))
-    val payloadIdx = inSchema.fieldIndex("payload")
-    df.mapPartitions { it =>
-      it.map { row =>
-        Row.fromSeq(row.toSeq :+ audioEnvelopeHashOf(row.getAs[Array[Byte]](payloadIdx)))
-      }
-    }(Encoders.row(outSchema))
-  }
+  def audioEnvelopeHash(df: DataFrame): DataFrame =
+    ParseStage.map[Array[Byte]](df, col("payload"),
+      StructField("ahash", StringType, nullable = false))(audioEnvelopeHashOf)
 
   private def audioEnvelopeHashOf(b: Array[Byte]): String = {
       var channels = 0; var dataOff = -1; var dataLen = 0; var bigEndian = false
@@ -569,46 +541,37 @@ object Multimodal {
 
   /** REAL visual feature: a `dim`-bucket grayscale histogram over the
     * decoded raster, normalized to sum 1 — the shape (fixed-dim float
-    * vector per payload, one decoder per partition) of an embedding-model
-    * pass. Payloads no JDK codec reads fall back to a byte-value histogram
-    * (same dimension, still deterministic).
+    * vector per payload) of an embedding-model pass. Payloads no JDK codec
+    * reads fall back to a byte-value histogram (same dimension, still
+    * deterministic).
     */
   def features(df: DataFrame, dim: Int = 8): DataFrame = {
     require(dim >= 1, s"dim must be >= 1, got $dim")
-    val inSchema = df.schema
-    val outSchema = inSchema.add(
-      StructField("features", ArrayType(FloatType, containsNull = false), nullable = false))
-    val payloadIdx = inSchema.fieldIndex("payload")
-    df.mapPartitions { it =>
-      ImageIO.setUseCache(false)
-      it.map { row =>
-        val bytes = row.getAs[Array[Byte]](payloadIdx)
-        val img =
-          try ImageIO.read(new ByteArrayInputStream(bytes)) catch { case _: Exception => null }
-        val hist = new Array[Long](dim)
-        var total = 0L
-        if (img != null) {
-          var y = 0
-          while (y < img.getHeight) {
-            var x = 0
-            while (x < img.getWidth) {
-              val rgb = img.getRGB(x, y)
-              val gray = (((rgb >> 16) & 0xff) * 299 + ((rgb >> 8) & 0xff) * 587 +
-                (rgb & 0xff) * 114) / 1000
-              hist(gray * dim / 256) += 1
-              total += 1
-              x += 1
-            }
-            y += 1
+    ParseStage.map[Array[Byte]](df, col("payload"), StructField("features",
+        ArrayType(FloatType, containsNull = false), nullable = false)) { bytes =>
+      val img = readImage(bytes)
+      val hist = new Array[Long](dim)
+      var total = 0L
+      if (img != null) {
+        var y = 0
+        while (y < img.getHeight) {
+          var x = 0
+          while (x < img.getWidth) {
+            val rgb = img.getRGB(x, y)
+            val gray = (((rgb >> 16) & 0xff) * 299 + ((rgb >> 8) & 0xff) * 587 +
+              (rgb & 0xff) * 114) / 1000
+            hist(gray * dim / 256) += 1
+            total += 1
+            x += 1
           }
-        } else {
-          var i = 0
-          while (i < bytes.length) { hist((bytes(i) & 0xff) * dim / 256) += 1; total += 1; i += 1 }
+          y += 1
         }
-        val v = Array.tabulate(dim)(i => if (total == 0) 0f else hist(i).toFloat / total)
-        Row.fromSeq(row.toSeq :+ v.toSeq)
+      } else {
+        var i = 0
+        while (i < bytes.length) { hist((bytes(i) & 0xff) * dim / 256) += 1; total += 1; i += 1 }
       }
-    }(Encoders.row(outSchema))
+      Array.tabulate(dim)(i => if (total == 0) 0f else hist(i).toFloat / total)
+    }
   }
 
   // ------------------------------------------- perceptual hash (dHash)
@@ -622,36 +585,29 @@ object Multimodal {
     * dHash lands a small hamming distance away, unlike the global
     * brightness shifts dHash is invariant to. */
   def withGradientPng(
-      docs: DataFrame, textCol: String, perturbedCol: String): DataFrame = {
-    val inSchema = docs.schema
-    val outSchema = inSchema.add(StructField("payload", BinaryType, nullable = false))
-    val textIdx = inSchema.fieldIndex(textCol)
-    val pertIdx = inSchema.fieldIndex(perturbedCol)
-    docs.mapPartitions { it =>
-      ImageIO.setUseCache(false)
-      it.map { row =>
-        val text = row.getString(textIdx)
-        val pert = row.getBoolean(pertIdx)
-        val (_, w, h) = geometryOf(text)
-        val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
-        var y = 0
-        while (y < h) {
-          var x = 0
-          while (x < w) {
-            val base = (x * 7 + y * 13 + 7) % 256
-            val g =
-              if (pert && x < w / 4 && y < h / 4) (base + 40) % 256 else base
-            img.setRGB(x, y, (g << 16) | (g << 8) | g)
-            x += 1
-          }
-          y += 1
+      docs: DataFrame, textCol: String, perturbedCol: String): DataFrame =
+    ParseStage.map[Row](docs, struct(col(textCol), col(perturbedCol)), Payload) { row =>
+      inMemoryCodecs
+      val text = row.getString(0)
+      val pert = row.getBoolean(1)
+      val (_, w, h) = geometryOf(text)
+      val img = new BufferedImage(w, h, BufferedImage.TYPE_INT_RGB)
+      var y = 0
+      while (y < h) {
+        var x = 0
+        while (x < w) {
+          val base = (x * 7 + y * 13 + 7) % 256
+          val g =
+            if (pert && x < w / 4 && y < h / 4) (base + 40) % 256 else base
+          img.setRGB(x, y, (g << 16) | (g << 8) | g)
+          x += 1
         }
-        val out = new ByteArrayOutputStream()
-        require(ImageIO.write(img, "png", out), "no JDK png writer")
-        Row.fromSeq(row.toSeq :+ out.toByteArray)
+        y += 1
       }
-    }(Encoders.row(outSchema))
-  }
+      val out = new ByteArrayOutputStream()
+      require(ImageIO.write(img, "png", out), "no JDK png writer")
+      out.toByteArray
+    }
 
   /** Perceptual difference hash (dHash, the classic 9×8 form): decode the
     * payload with the REAL JDK codec, box-average the luma onto a 9-wide ×
@@ -660,63 +616,53 @@ object Multimodal {
     * once), then emit 64 bits — bit (j,i) = mean(i,j) > mean(i+1,j),
     * row-major j outer — as a '0'/'1' string. Brightness/contrast shifts
     * preserve the hash; local edits flip only the cells they touch.
-    * Unreadable payloads hash to the empty string. Narrow per-partition
-    * transform, no shuffle. */
-  def dHash(df: DataFrame): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = inSchema.add(StructField("dhash", StringType, nullable = false))
-    val payloadIdx = inSchema.fieldIndex("payload")
-    df.mapPartitions { it =>
-      ImageIO.setUseCache(false)
-      it.map { row =>
-        val bytes = row.getAs[Array[Byte]](payloadIdx)
-        val img =
-          try ImageIO.read(new ByteArrayInputStream(bytes)) catch { case _: Exception => null }
-        val hash =
-          if (img == null) ""
-          else {
-            val w = img.getWidth
-            val h = img.getHeight
-            val means = Array.ofDim[Double](9, 8)
-            var i = 0
-            while (i < 9) {
-              var j = 0
-              while (j < 8) {
-                val xa = i * w / 9; val xb = (i + 1) * w / 9
-                val ya = j * h / 8; val yb = (j + 1) * h / 8
-                var sum = 0L
-                var y = ya
-                while (y < yb) {
-                  var x = xa
-                  while (x < xb) {
-                    val rgb = img.getRGB(x, y)
-                    sum += (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / 3
-                    x += 1
-                  }
-                  y += 1
-                }
-                val n = (xb - xa).toLong * (yb - ya)
-                means(i)(j) = if (n == 0) 0.0 else sum.toDouble / n
-                j += 1
-              }
-              i += 1
-            }
-            val sb = new java.lang.StringBuilder(64)
+    * Unreadable payloads hash to the empty string. Narrow per-row stage,
+    * no shuffle. */
+  def dHash(df: DataFrame): DataFrame =
+    ParseStage.map[Array[Byte]](df, col("payload"),
+        StructField("dhash", StringType, nullable = false)) { bytes =>
+      val img = readImage(bytes)
+        if (img == null) ""
+        else {
+          val w = img.getWidth
+          val h = img.getHeight
+          val means = Array.ofDim[Double](9, 8)
+          var i = 0
+          while (i < 9) {
             var j = 0
             while (j < 8) {
-              var i2 = 0
-              while (i2 < 8) {
-                sb.append(if (means(i2)(j) > means(i2 + 1)(j)) '1' else '0')
-                i2 += 1
+              val xa = i * w / 9; val xb = (i + 1) * w / 9
+              val ya = j * h / 8; val yb = (j + 1) * h / 8
+              var sum = 0L
+              var y = ya
+              while (y < yb) {
+                var x = xa
+                while (x < xb) {
+                  val rgb = img.getRGB(x, y)
+                  sum += (((rgb >> 16) & 0xff) + ((rgb >> 8) & 0xff) + (rgb & 0xff)) / 3
+                  x += 1
+                }
+                y += 1
               }
+              val n = (xb - xa).toLong * (yb - ya)
+              means(i)(j) = if (n == 0) 0.0 else sum.toDouble / n
               j += 1
             }
-            sb.toString
+            i += 1
           }
-        Row.fromSeq(row.toSeq :+ hash)
-      }
-    }(Encoders.row(outSchema))
-  }
+          val sb = new java.lang.StringBuilder(64)
+          var j = 0
+          while (j < 8) {
+            var i2 = 0
+            while (i2 < 8) {
+              sb.append(if (means(i2)(j) > means(i2 + 1)(j)) '1' else '0')
+              i2 += 1
+            }
+            j += 1
+          }
+          sb.toString
+        }
+    }
 
   /** Near-dup image pairs by dHash hamming distance: band the 64-bit
     * string into `bands` equal substrings and hash-join on any equal band
@@ -835,28 +781,17 @@ object Multimodal {
   }
 
   /** Attach a deterministic MP4 payload derived from `textCol`. */
-  def withVideoPayload(docs: DataFrame, textCol: String): DataFrame = {
-    val inSchema = docs.schema
-    val outSchema = inSchema.add(StructField("payload", BinaryType, nullable = false))
-    val textIdx = inSchema.fieldIndex(textCol)
-    docs.mapPartitions { it =>
-      it.map { row =>
-        val (ts, ticks, w, h) = videoGeometryOf(row.getString(textIdx))
-        Row.fromSeq(row.toSeq :+ encodeMp4(ts, ticks, w, h))
-      }
-    }(Encoders.row(outSchema))
-  }
+  def withVideoPayload(docs: DataFrame, textCol: String): DataFrame =
+    ParseStage.map[String](docs, col(textCol), Payload) { text =>
+      val (ts, ticks, w, h) = videoGeometryOf(text)
+      encodeMp4(ts, ticks, w, h)
+    }
 
-  /** Per-partition header decode of the video `payload` → `video_meta`. */
-  def decodeVideo(df: DataFrame): DataFrame = {
-    val inSchema = df.schema
-    val outSchema = inSchema.add(StructField("video_meta", VideoMetaSchema, nullable = false))
-    val payloadIdx = inSchema.fieldIndex("payload")
-    df.mapPartitions { it =>
-      it.map { row =>
-        val (c, ts, ticks, ms, w, h, n) = decodeVideoMeta(row.getAs[Array[Byte]](payloadIdx))
-        Row.fromSeq(row.toSeq :+ Row(c, ts, ticks, ms, w, h, n))
-      }
-    }(Encoders.row(outSchema))
-  }
+  /** Header decode of the video `payload` → `video_meta`. */
+  def decodeVideo(df: DataFrame): DataFrame =
+    ParseStage.map[Array[Byte]](df, col("payload"),
+        StructField("video_meta", VideoMetaSchema, nullable = false)) { bytes =>
+      val (c, ts, ticks, ms, w, h, n) = decodeVideoMeta(bytes)
+      Row(c, ts, ticks, ms, w, h, n)
+    }
 }

@@ -57,15 +57,8 @@ object Skew {
       .withColumn("__sk_start", isStart.cast("int"))
     val wSlice = Window.partitionBy(col("__sk_k"), col("__sk_slice")).orderBy(order.asc)
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val perSlice = d0.groupBy(col("__sk_k"), col("__sk_slice"))
-      .agg(sum(col("__sk_start")).as("__sk_n"))
-    val wOff = Window.partitionBy(col("__sk_k")).orderBy(col("__sk_slice").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = perSlice
-      .withColumn("__sk_off", coalesce(sum(col("__sk_n")).over(wOff), lit(0L)))
-      .drop("__sk_n")
-    d0.withColumn("__sk_wblock", sum(col("__sk_start")).over(wSlice))
-      .join(offsets, Seq("__sk_k", "__sk_slice"))
+    withSliceOffset(d0.withColumn("__sk_wblock", sum(col("__sk_start")).over(wSlice)),
+        Seq("__sk_k"), sum(col("__sk_start")))
       .withColumn("block", col("__sk_wblock") + col("__sk_off"))
       .groupBy(col("__sk_k").as("key"), col("block"))
       .agg(Correlation.blockAggs(order, text).head,
@@ -113,15 +106,8 @@ object Skew {
     val d1 = d0.join(bnd, Seq("__sk_k", "__sk_slice"), "left")
       .withColumn("__sk_keep", keep)
       .withColumn("__sk_wrun", sum(col("__sk_keep").cast("long")).over(wRun))
-    val perSlice = d1.groupBy(col("__sk_k"), col("__sk_slice"))
-      .agg(sum(col("__sk_keep").cast("long")).as("__sk_n"))
-    val wOff = Window.partitionBy(col("__sk_k")).orderBy(col("__sk_slice").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = perSlice
-      .withColumn("__sk_off", coalesce(sum(col("__sk_n")).over(wOff), lit(0L)))
-      .drop("__sk_n")
     val runW = Window.partitionBy(col("__sk_k"), col("__sk_run"))
-    d1.join(offsets, Seq("__sk_k", "__sk_slice"))
+    withSliceOffset(d1, Seq("__sk_k"), sum(col("__sk_keep").cast("long")))
       .withColumn("__sk_run", col("__sk_wrun") + col("__sk_off"))
       .withColumn("repeated", count(lit(1)).over(runW) - 1)
       .filter(col("__sk_keep"))
@@ -147,31 +133,7 @@ object Skew {
       sliceSeconds: Long = 86400L): DataFrame = {
     require(sliceSeconds > timeoutSeconds,
       "order-aligned slicing needs sliceSeconds > timeoutSeconds")
-    val d0 = df
-      .withColumn("__sk_k", struct(keys: _*))
-      .withColumn("__sk_slice", floor(unix_timestamp(ts) / sliceSeconds))
-    val wSlice = Window.partitionBy(col("__sk_k"), col("__sk_slice")).orderBy(ts.asc)
-    val bnd = d0.groupBy(col("__sk_k"), col("__sk_slice"))
-      .agg(max(ts).as("__pb_ts0"))
-      .select(col("__sk_k"), (col("__sk_slice") + 1).as("__sk_slice"),
-        col("__pb_ts0").as("__pb_ts"))
-    val rn = row_number().over(wSlice)
-    val prevTs = when(rn === 1, col("__pb_ts")).otherwise(lag(ts, 1).over(wSlice))
-    val isNew = prevTs.isNull ||
-      unix_timestamp(ts) - unix_timestamp(prevTs) > timeoutSeconds
-    val wRun = wSlice.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    val d1 = d0.join(bnd, Seq("__sk_k", "__sk_slice"), "left")
-      .withColumn("__sk_new", isNew.cast("long"))
-      .withColumn("__sk_wsess", sum(col("__sk_new")).over(wRun))
-    val perSlice = d1.groupBy(col("__sk_k"), col("__sk_slice"))
-      .agg(sum(col("__sk_new")).as("__sk_n"))
-    val wOff = Window.partitionBy(col("__sk_k")).orderBy(col("__sk_slice").asc)
-      .rowsBetween(Window.unboundedPreceding, -1)
-    val offsets = perSlice
-      .withColumn("__sk_off", coalesce(sum(col("__sk_n")).over(wOff), lit(0L)))
-      .drop("__sk_n")
-    val grouped = d1.join(offsets, Seq("__sk_k", "__sk_slice"))
-      .withColumn("__sk_sess", col("__sk_wsess") + col("__sk_off"))
+    val grouped = sessionIds(df, keys, ts, timeoutSeconds, sliceSeconds)
       .groupBy(col("__sk_k"), col("__sk_sess"))
       .agg(aggs.head, (aggs.tail :+
         min(ts).as("session_start") :+
@@ -215,11 +177,42 @@ object Skew {
     require(sliceSeconds > timeoutSeconds,
       "order-aligned slicing needs sliceSeconds > timeoutSeconds")
     require(triggerCount >= 1, s"triggerCount must be >= 1, got $triggerCount")
-    val ord = (ts +: tieBreak).map(_.asc)
+    val sessions = sessionIds(df, keys, ts, timeoutSeconds, sliceSeconds)
+      .drop("__sk_off")
+    // position within the session: sessions are contiguous in time order,
+    // so within a slice each session is a contiguous run — rank within
+    // (key, slice, session) plus the session's row count in earlier slices
+    val wSess = Window.partitionBy(col("__sk_k"), col("__sk_slice"), col("__sk_sess"))
+      .orderBy((ts +: tieBreak).map(_.asc): _*)
+    val blocked = withSliceOffset(
+        sessions.withColumn("__sk_pos", row_number().over(wSess).cast("long")),
+        Seq("__sk_k", "__sk_sess"), count(lit(1)))
+      .withColumn("__ctx",
+        floor((col("__sk_pos") + col("__sk_off") - 1) / triggerCount))
+    val grouped = blocked
+      .groupBy((keys :+ col("__sk_sess") :+ col("__ctx")): _*)
+      .agg(aggs.head, aggs.tail: _*)
+      .drop("__sk_sess", "__ctx")
+    if (!injectPassThrough) grouped
+    else grouped.unionByName(df, allowMissingColumns = true)
+  }
+
+  /** `df` with `__sk_k` (the key struct), `__sk_slice` and `__sk_sess`: a
+    * session id per row, the running count of session-start markers (a gap
+    * > timeout after the key's previous row) in `ts` order. Each (key,
+    * slice) counts its own markers; a slice's first row reads its
+    * predecessor from the neighbour slice's last `ts` (a missing neighbour
+    * means a gap >= sliceSeconds > timeout, so null ≡ new session), and
+    * [[withSliceOffset]] adds the markers of the key's earlier slices. Rows
+    * tied on `ts` have a gap of 0, so a tie-break order gives the same ids.
+    */
+  private def sessionIds(
+      df: DataFrame, keys: Seq[Column], ts: Column,
+      timeoutSeconds: Long, sliceSeconds: Long): DataFrame = {
     val d0 = df
       .withColumn("__sk_k", struct(keys: _*))
       .withColumn("__sk_slice", floor(unix_timestamp(ts) / sliceSeconds))
-    val wSlice = Window.partitionBy(col("__sk_k"), col("__sk_slice")).orderBy(ord: _*)
+    val wSlice = Window.partitionBy(col("__sk_k"), col("__sk_slice")).orderBy(ts.asc)
     val bnd = d0.groupBy(col("__sk_k"), col("__sk_slice"))
       .agg(max(ts).as("__pb_ts0"))
       .select(col("__sk_k"), (col("__sk_slice") + 1).as("__sk_slice"),
@@ -232,38 +225,22 @@ object Skew {
     val d1 = d0.join(bnd, Seq("__sk_k", "__sk_slice"), "left")
       .withColumn("__sk_new", isNew.cast("long"))
       .withColumn("__sk_wsess", sum(col("__sk_new")).over(wRun))
-    val perSlice = d1.groupBy(col("__sk_k"), col("__sk_slice"))
-      .agg(sum(col("__sk_new")).as("__sk_n"))
-    val wOff = Window.partitionBy(col("__sk_k")).orderBy(col("__sk_slice").asc)
+    withSliceOffset(d1, Seq("__sk_k"), sum(col("__sk_new")))
+      .withColumn("__sk_sess", col("__sk_wsess") + col("__sk_off"))
+  }
+
+  /** `d` joined with `__sk_off`: per (`part`, `__sk_slice`), the sum of the
+    * per-slice aggregate `n` over the same `part`'s earlier slices (0 for
+    * its first) — the cross-slice running offset of an order-aligned
+    * decomposition, computed on the slice-level frame (#slices, not rows).
+    */
+  private def withSliceOffset(d: DataFrame, part: Seq[String], n: Column): DataFrame = {
+    val wOff = Window.partitionBy(part.map(col): _*).orderBy(col("__sk_slice").asc)
       .rowsBetween(Window.unboundedPreceding, -1)
-    val sessOffsets = perSlice
-      .withColumn("__sk_soff", coalesce(sum(col("__sk_n")).over(wOff), lit(0L)))
+    val offsets = d.groupBy((part :+ "__sk_slice").map(col): _*).agg(n.as("__sk_n"))
+      .withColumn("__sk_off", coalesce(sum(col("__sk_n")).over(wOff), lit(0L)))
       .drop("__sk_n")
-    val d2 = d1.join(sessOffsets, Seq("__sk_k", "__sk_slice"))
-      .withColumn("__sk_sess", col("__sk_wsess") + col("__sk_soff"))
-    // position within the session: sessions are contiguous in time order,
-    // so within a slice each session is a contiguous run — rank within
-    // (key, slice, session) plus the session's row count in earlier slices
-    val wSess = Window.partitionBy(col("__sk_k"), col("__sk_slice"), col("__sk_sess"))
-      .orderBy(ord: _*)
-    val perSessSlice = d2.groupBy(col("__sk_k"), col("__sk_sess"), col("__sk_slice"))
-      .agg(count(lit(1)).as("__sk_c"))
-    val wPOff = Window.partitionBy(col("__sk_k"), col("__sk_sess"))
-      .orderBy(col("__sk_slice").asc).rowsBetween(Window.unboundedPreceding, -1)
-    val posOffsets = perSessSlice
-      .withColumn("__sk_poff", coalesce(sum(col("__sk_c")).over(wPOff), lit(0L)))
-      .drop("__sk_c")
-    val blocked = d2
-      .withColumn("__sk_pos", row_number().over(wSess).cast("long"))
-      .join(posOffsets, Seq("__sk_k", "__sk_sess", "__sk_slice"))
-      .withColumn("__ctx",
-        floor((col("__sk_pos") + col("__sk_poff") - 1) / triggerCount))
-    val grouped = blocked
-      .groupBy((keys :+ col("__sk_sess") :+ col("__ctx")): _*)
-      .agg(aggs.head, aggs.tail: _*)
-      .drop("__sk_sess", "__ctx")
-    if (!injectPassThrough) grouped
-    else grouped.unionByName(df, allowMissingColumns = true)
+    d.join(offsets, part :+ "__sk_slice")
   }
 
   /** Alias name of an agg Column (aggs passed to saltedSessionize must be

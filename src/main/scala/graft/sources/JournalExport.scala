@@ -3,9 +3,11 @@ package graft.sources
 import scala.collection.immutable.ListMap
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.parsers.ParseStage
 
 /** systemd journal source — the reference's `systemd-journal()` driver
   * (reference `modules/systemd-journal/journal-reader.c`) over the journal
@@ -26,8 +28,8 @@ import org.apache.spark.sql.types._
   * microseconds, and every field lands (prefixed, default `.journald.`) in
   * the fields map with values truncated to `max-field-size`.
   *
-  * Scale: one flatMap over file bytes (narrow); journals are per-host —
-  * read many with per-file parallelism.
+  * Scale: one per-row stage over file bytes (a `ParseStage` generator,
+  * narrow); journals are per-host — read many with per-file parallelism.
   */
 object JournalExport {
 
@@ -110,11 +112,8 @@ object JournalExport {
     * journal entry. */
   def parseFiles(files: DataFrame, content: Column,
       prefix: String = ".journald.", maxFieldSize: Int = 65536): DataFrame =
-    files.select(content.as("bytes")).mapPartitions { it =>
-      it.flatMap { row =>
-        entries(row.getAs[Array[Byte]](0), maxFieldSize).map(toRow(_, prefix))
-      }
-    }(Encoders.row(schema))
+    ParseStage.flatMap[Array[Byte]](files.select(content.as("bytes")), col("bytes"), schema)(
+      entries(_, maxFieldSize).map(toRow(_, prefix))).drop("bytes")
 
   /** Read export-format files from a path glob. */
   def read(spark: SparkSession, path: String,

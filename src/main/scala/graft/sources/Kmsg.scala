@@ -3,9 +3,11 @@ package graft.sources
 import scala.collection.immutable.ListMap
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.parsers.ParseStage
 
 /** Linux `/dev/kmsg` record format — the reference's `system()` kernel
   * source (reference `modules/linux-kmsg-format/linux-kmsg-format.c`):
@@ -28,8 +30,8 @@ import org.apache.spark.sql.types._
   * linux-kmsg-format.c:196-270). Malformed headers → one ok=false row
   * carrying the raw record. `\xNN` escapes stay raw, as in the reference.
   *
-  * Scale: same shape as the other OS sources — per-partition flatMap over
-  * file bytes, no shuffle.
+  * Scale: same shape as the other OS sources — one per-row stage over
+  * file bytes (a `ParseStage` generator), no shuffle.
   */
 object Kmsg {
 
@@ -119,9 +121,8 @@ object Kmsg {
 
   /** Decode a binary/text column of whole kmsg dumps. */
   def parseFiles(files: DataFrame, content: Column, bootEpochUsec: Long): DataFrame =
-    files.select(content.cast("string").as("txt")).mapPartitions { it =>
-      it.flatMap(row => records(row.getString(0)).map(parseRecord(_, bootEpochUsec)))
-    }(Encoders.row(schema))
+    ParseStage.flatMap[String](files.select(content.cast("string").as("txt")), col("txt"), schema)(
+      records(_).map(parseRecord(_, bootEpochUsec))).drop("txt")
 
   def read(spark: SparkSession, path: String, bootEpochUsec: Long): DataFrame =
     parseFiles(spark.read.format("binaryFile").load(path), col("content"), bootEpochUsec)

@@ -2,9 +2,11 @@ package graft.sources
 
 import java.nio.{ByteBuffer, ByteOrder}
 
-import org.apache.spark.sql.{DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.parsers.ParseStage
 
 /** Linux process-accounting (`pacct`) source — the reference's
   * `file("/var/log/account/pacct" format(pacct))` driver
@@ -25,9 +27,9 @@ import org.apache.spark.sql.types._
   * A non-v3 record yields one `ok=false` row carrying the reference's
   * error message shape instead of fields (pacct-format.c:121-130).
   *
-  * Scale: the file explodes into 64-byte records per-partition (flatMap,
-  * narrow); pacct files are per-host and small — the 100 TB path is many
-  * hosts' files read with per-file parallelism.
+  * Scale: the file explodes into its 64-byte records in one per-row stage
+  * (a `ParseStage` generator, narrow); pacct files are per-host and small
+  * — the 100 TB path is many hosts' files read with per-file parallelism.
   */
 object Pacct {
 
@@ -101,11 +103,9 @@ object Pacct {
     * `spark.read.format("binaryFile")`) — each file explodes into its
     * 64-byte records, a trailing partial record becomes one ok=false row.
     */
-  def parseFiles(files: DataFrame, content: org.apache.spark.sql.Column): DataFrame = {
-    val in = files.select(content.as("bytes"))
-    in.mapPartitions { it =>
-      it.flatMap { row =>
-        val bytes = row.getAs[Array[Byte]](0)
+  def parseFiles(files: DataFrame, content: org.apache.spark.sql.Column): DataFrame =
+    ParseStage.flatMap[Array[Byte]](files.select(content.as("bytes")), col("bytes"), outSchema) {
+      bytes =>
         val full = bytes.length / RecordSize
         val recs = (0 until full).iterator.map { i =>
           decodeRecord(bytes.slice(i * RecordSize, (i + 1) * RecordSize))
@@ -116,9 +116,7 @@ object Pacct {
             s"truncated pacct record: ${bytes.length % RecordSize} trailing bytes")
             ++ Seq.fill(18)(null)))
         recs ++ tail
-      }
-    }(Encoders.row(outSchema))
-  }
+    }.drop("bytes")
 
   /** Read pacct files from a path glob. */
   def read(spark: SparkSession, path: String): DataFrame =

@@ -6,9 +6,11 @@ import java.util.zip.GZIPInputStream
 import scala.collection.immutable.ListMap
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+
+import graft.parsers.ParseStage
 
 /** WARC / WET archive source (ISO 28500 — the Common Crawl container),
   * the ingestion front door of a web-scale training-data pipeline: crawl
@@ -26,7 +28,8 @@ import org.apache.spark.sql.types._
   * but member boundaries and the magic make resync reliable in practice);
   * malformed records are dropped, parsed ones keep arrival order.
   *
-  * Scale shape: one narrow flatMap over whole-file bytes — no shuffle.
+  * Scale shape: one narrow per-row stage over whole-file bytes (a
+  * `ParseStage` generator) — no shuffle.
   * Crawl archives ship as many ~1 GB shards (Common Crawl: ~10^5 per
   * crawl), so per-FILE parallelism is the natural unit and a shard fits
   * executor memory; `spark.read.format("binaryFile")` + this decoder is
@@ -145,9 +148,8 @@ object Warc {
 
   /** Decode a binary column of WARC archives: one row per record. */
   def parseFiles(files: DataFrame, content: Column): DataFrame =
-    files.select(content.as("bytes")).mapPartitions { it =>
-      it.flatMap(row => records(row.getAs[Array[Byte]](0)).map(toRow))
-    }(Encoders.row(schema))
+    ParseStage.flatMap[Array[Byte]](files.select(content.as("bytes")), col("bytes"), schema)(
+      records(_).map(toRow)).drop("bytes")
 
   /** Read `.warc`/`.wet`(`.gz`) files from a path glob. */
   def read(spark: SparkSession, path: String): DataFrame =
@@ -155,7 +157,7 @@ object Warc {
 
   /** STREAMING read: new archive files dropped into the watched directory
     * become record rows — continuous crawl ingestion (the wildcard-file()
-    * analog for the corpus tier). The decoder is the same narrow flatMap;
+    * analog for the corpus tier). The decoder is the same narrow stage;
     * offsets/discovery ride the file-source checkpoint. */
   def readStream(spark: SparkSession, path: String): DataFrame =
     parseFiles(

@@ -6,8 +6,6 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, StreamingQuery}
 
-import graft.parsers.GrokStage
-
 /** One transcript turn (the input_hint schema). */
 final case class Turn(
     conv_id: String,
@@ -40,9 +38,10 @@ private final case class SessionState(
   *    source discovers new files — the wildcard-file() analog, reference
   *    modules/affile/wildcard-source.c), offsets tracked in the checkpoint
   *    (the reference's persist-state file positions, lib/logreader bookmark)
-  *  - the parse and route stages are the SAME code as batch (narrow
-  *    transforms are streaming-safe); `parsed` does not run the batch
-  *    enrichment, so streamed rows carry no lookup columns
+  *  - parse, enrich and route are the SAME code as batch:
+  *    `Pipeline.flaggedFrom` over a stream (narrow transforms and the
+  *    broadcast lookup join are streaming-safe), so streamed rows carry the
+  *    same columns as batch rows
   *  - grouping-by with timeout()/trigger() maps to flatMapGroupsWithState
   *    with event-time timeout (the reference's timer-wheel advanced by
   *    message timestamps, modules/correlation/grouping-parser.c:80-127)
@@ -58,12 +57,6 @@ object StreamingPipeline {
     spark.readStream
       .schema("conv_id string, turn_idx int, role string, text string, tool string, ts timestamp")
       .parquet(dir)
-
-  /** parse → route flags, streaming-safe (the batch stages minus enrich). */
-  def parsed(stream: DataFrame): DataFrame = {
-    val p = GrokStage(stream, "text", GrokStage.transcriptRules)
-    graft.Pipeline.withRoutes(p)
-  }
 
   /** Windowed per-sink aggregate with a watermark: the streaming form of
     * Pipeline.sinkCounts. Late rows beyond the watermark are dropped from

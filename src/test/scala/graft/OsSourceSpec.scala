@@ -3,8 +3,9 @@ package graft
 import java.nio.{ByteBuffer, ByteOrder}
 
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StringType, StructField}
 
-import graft.sources.{JournalExport, Pacct}
+import graft.sources.{JournalExport, Kmsg, Pacct}
 
 /** OS-format sources: Linux process accounting (acct_v3 binary records,
   * reference modules/pacctformat) and the systemd journal export format
@@ -91,6 +92,19 @@ class OsSourceSpec extends SparkSpec {
     assert(r3.toSeq === Seq("netdev", "2"))
     val bad = rows.where(!col("ok")).select("msg").head()
     assert(bad.getString(0) === "not a kmsg header")
+  }
+
+  test("file decoders run as one parse Generate each, output schema unchanged") {
+    val files = Seq(Tuple1(Array[Byte](1, 2, 3))).toDF("content")
+    val pacct = Pacct.parseFiles(files, col("content"))
+    val kmsg = Kmsg.parseFiles(files, col("content"), 0L)
+    val journal = JournalExport.parseFiles(files, col("content"))
+    assertRowStagePath(pacct, "pacct")
+    assertRowStagePath(kmsg, "kmsg")
+    assertRowStagePath(journal, "journal export")
+    assert(pacct.schema === Pacct.schema.add(StructField("ac_comm", StringType, nullable = true)))
+    assert(kmsg.schema === Kmsg.schema)
+    assert(journal.schema === JournalExport.schema)
   }
 
   test("journal export format: entries, binary fields, reference field mapping") {

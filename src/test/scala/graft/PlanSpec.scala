@@ -10,6 +10,7 @@ import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.ArrayType
 
+import graft.corpus.Multimodal
 import graft.operators.Correlation
 import graft.parsers.ParseGenerator
 import graft.routing.Router
@@ -83,6 +84,26 @@ class PlanSpec extends SparkSpec with AdaptiveSparkPlanHelper {
     * cartesian stage, with the reason it is scale-safe. */
   private val nestedLoopAllowed: Map[String, String] = Map(
     "q_embed_topk" -> "brute-force top-k: query set is tiny and broadcast; corpus side streams")
+
+  test("row-stage gate: every multimodal codec plans as a parse Generate, no object round trip") {
+    val names = SparkEntry.queries.keys.filter(_.startsWith("q_multimodal_")).toSeq.sorted
+    assert(names.length === 7)
+    names.foreach(n => assertRowStagePath(SparkEntry.queries(n)(spark, sfUnit), n))
+  }
+
+  test("a codec stage keeps a filter on its output above it and moves an input filter below") {
+    val docs = spark.read.parquet(s"$sfUnit/documents.parquet")
+    val p = physical(Multimodal.decode(Multimodal.withPayload(docs, "text"))
+      .where(col("meta.width") > 20 && col("doc_id") < 50))
+    val decode = parseGenerates(p).find(_.generatorOutput.exists(_.name == "meta"))
+      .getOrElse(fail(s"no decode Generate:\n$p"))
+    val filters = p.collect { case f: FilterExec => f }
+    def on(c: String) = filters.filter(_.condition.references.exists(_.name == c))
+    assert(on("meta").nonEmpty && on("meta").forall(_.find(_ eq decode).isDefined),
+      s"a filter on meta is not above the decode Generate:\n$p")
+    assert(on("doc_id").nonEmpty && on("doc_id").forall(f => decode.find(_ eq f).isDefined),
+      s"a filter on doc_id is not below the decode Generate:\n$p")
+  }
 
   test("no unbounded join: every query plans without cartesian/nested-loop (except declared)") {
     val offenders = SparkEntry.queries.keys.toSeq.sorted.flatMap { name =>

@@ -95,7 +95,7 @@ class StreamingSpec extends SparkSpec {
 
     part1.coalesce(1).write.mode("append").parquet(inDir)
     val q1 = StreamingPipeline.writeSinks(
-      StreamingPipeline.parsed(StreamingPipeline.source(spark, inDir)),
+      Pipeline.flaggedFrom(spark, StreamingPipeline.source(spark, inDir)),
       Seq("all", "errors"), outDir, ckpt)
     q1.processAllAvailable(); q1.stop()
     assert(spark.read.parquet(s"$outDir/sink_all").count() === n1)
@@ -103,7 +103,7 @@ class StreamingSpec extends SparkSpec {
     // new file while the query is down → resume picks up ONLY the new file
     part2.coalesce(1).write.mode("append").parquet(inDir)
     val q2 = StreamingPipeline.writeSinks(
-      StreamingPipeline.parsed(StreamingPipeline.source(spark, inDir)),
+      Pipeline.flaggedFrom(spark, StreamingPipeline.source(spark, inDir)),
       Seq("all", "errors"), outDir, ckpt)
     q2.processAllAvailable(); q2.stop()
     val allRows = spark.read.parquet(s"$outDir/sink_all")
@@ -129,14 +129,14 @@ class StreamingSpec extends SparkSpec {
     // batch 0 lands normally
     part1.coalesce(1).write.mode("append").parquet(inDir)
     val q1 = StreamingPipeline.writeSinks(
-      StreamingPipeline.parsed(StreamingPipeline.source(spark, inDir)),
+      Pipeline.flaggedFrom(spark, StreamingPipeline.source(spark, inDir)),
       Seq("all", "errors"), outDir, ckpt)
     q1.processAllAvailable(); q1.stop()
 
     // batch 1's FIRST attempt dies after sink_all committed, before
     // sink_errors — the foreachBatch offset never commits
     part2.coalesce(1).write.mode("append").parquet(inDir)
-    val crashing = StreamingPipeline.parsed(StreamingPipeline.source(spark, inDir))
+    val crashing = Pipeline.flaggedFrom(spark, StreamingPipeline.source(spark, inDir))
       .writeStream.option("checkpointLocation", ckpt)
       .foreachBatch { (batch: org.apache.spark.sql.DataFrame, batchId: Long) =>
         StreamingPipeline.writeSinksBatch(batch, batchId, Seq("all", "errors"),
@@ -156,7 +156,7 @@ class StreamingSpec extends SparkSpec {
     // restart replays batch 1 in full; dynamic overwrite of the batch_id
     // partition makes the half-delivered sink converge, not duplicate
     val q2 = StreamingPipeline.writeSinks(
-      StreamingPipeline.parsed(StreamingPipeline.source(spark, inDir)),
+      Pipeline.flaggedFrom(spark, StreamingPipeline.source(spark, inDir)),
       Seq("all", "errors"), outDir, ckpt)
     q2.processAllAvailable(); q2.stop()
 
@@ -278,6 +278,27 @@ class StreamingSpec extends SparkSpec {
     } finally q.stop()
   }
 
+  test("a flagged file stream equals batch flaggedFrom over the same files, on every column") {
+    val inDir = Files.createTempDirectory("graft-stream-flagged").toString + "/in"
+    graft.transcripts.Transcripts.load(spark, sfUnit)
+      .withColumn("ts", col("ts").cast("timestamp"))
+      .coalesce(2).write.parquet(inDir)
+    val stream = StreamingPipeline.source(spark, inDir)
+    val q = Pipeline.flaggedFrom(spark, stream)
+      .writeStream.format("memory").queryName("flagged").outputMode("append").start()
+    try {
+      q.processAllAvailable()
+      val streamed = spark.table("flagged")
+      val batch = Pipeline.flaggedFrom(spark, spark.read.schema(stream.schema).parquet(inDir))
+      assert(streamed.columns.toSeq === batch.columns.toSeq)
+      def rows(df: org.apache.spark.sql.DataFrame) = df.collect()
+        .sortBy(r => (r.getAs[String]("conv_id"), r.getAs[Int]("turn_idx"))).map(_.toSeq).toSeq
+      val got = rows(streamed)
+      assert(got.nonEmpty)
+      assert(got === rows(batch))
+    } finally q.stop()
+  }
+
   test("streaming windowed sink counts match the batch aggregate on closed input") {
     val base = Files.createTempDirectory("graft-stream2").toString
     val inDir = s"$base/in"
@@ -285,7 +306,7 @@ class StreamingSpec extends SparkSpec {
       .withColumn("ts", col("ts").cast("timestamp"))
       .filter(col("turn_idx") < 3)
     t.coalesce(2).write.parquet(inDir)
-    val flagged = StreamingPipeline.parsed(StreamingPipeline.source(spark, inDir))
+    val flagged = Pipeline.flaggedFrom(spark, StreamingPipeline.source(spark, inDir))
     val q = StreamingPipeline.sinkCounts(flagged)
       .writeStream.format("memory").queryName("counts").outputMode("complete").start()
     try {

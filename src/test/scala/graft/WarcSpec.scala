@@ -59,6 +59,14 @@ class WarcSpec extends SparkSpec {
     assert(ts === "2024-01-02 03:04:05")
   }
 
+  test("warc: the decoder runs as one parse Generate, output schema unchanged") {
+    val dir = java.nio.file.Files.createTempDirectory("graft-warc-plan")
+    java.nio.file.Files.write(dir.resolve("shard.wet"), wet)
+    val df = Warc.read(spark, dir.toString + "/*.wet")
+    assertRowStagePath(df, "warc")
+    assert(df.schema === Warc.schema)
+  }
+
   test("warc: multi-member gzip decodes to the same records") {
     val dir = java.nio.file.Files.createTempDirectory("graft-warcgz")
     java.nio.file.Files.write(dir.resolve("shard.wet.gz"), gzMembers(Seq(
